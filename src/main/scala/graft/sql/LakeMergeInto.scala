@@ -24,12 +24,15 @@ import graft.tables.{LakeTable, MergeClauses}
   * WHEN NOT MATCHED BY SOURCE AND t.stale THEN DELETE
   * }}}
   *
-  * The unconditional `UPDATE SET * / INSERT *` pair fast-paths to
-  * `LakeTable.merge` (schema-evolving upsert). Every other shape converts
-  * once fully resolved: each action's expressions remap target/source
-  * attribute references (by exprId) onto the [[MergeClauses]] frame and
-  * run through `LakeTable.mergeClauses` — SQL clause-order semantics on
-  * the same copy-on-write, file-pruned commit path.
+  * Both shapes run on the table layer's one merge engine. The
+  * unconditional `UPDATE SET * / INSERT *` pair goes through
+  * `LakeTable.merge`, which adds schema evolution and PyIceberg's rule
+  * that any duplicate source key raises, then runs that clause set. Every
+  * other shape converts once fully resolved: each action's expressions
+  * remap target/source attribute references (by exprId) onto the
+  * [[MergeClauses]] frame and run through `LakeTable.mergeClauses` — SQL
+  * clause-order semantics, where only a duplicate key matching a target
+  * row raises, on the same copy-on-write, file-pruned commit path.
   */
 final class LakeMergeIntoRule(spark: SparkSession) extends Rule[LogicalPlan] {
 

@@ -46,21 +46,16 @@ object StreamingIngest {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Persist before the isEmpty probe: for a heavy batchTransform (the
-        // streaming dedup gate runs a full LSH probe) the emptiness check
-        // would otherwise materialize the whole result once and the write
-        // would recompute it from scratch.
+        // An empty batch must not create the table, so the drain probes
+        // emptiness before `ensure`; the table layer has no probe of its
+        // own and decides skip-empty after its write. Persisted so a heavy
+        // batchTransform (the streaming dedup gate runs a full LSH probe)
+        // is computed once.
         val out = batchTransform(batch).persist()
         try {
-          if (!out.isEmpty) {
-            val table = LakeTable.ensure(batch.sparkSession, tableLocation,
-              out.schema, identifierFields = mergeOn)
-            // Mode-specific writer directly: write()'s merge dispatch
-            // re-probes df.isEmpty — a second take(1) job per drain on a
-            // frame this probe just proved non-empty.
-            if (writeMode == "merge") table.merge(out, mergeOn)
-            else table.append(out)
-          }
+          if (!out.isEmpty)
+            LakeTable.ensure(batch.sparkSession, tableLocation, out.schema,
+              identifierFields = mergeOn).write(out, writeMode, mergeOn)
         } finally out.unpersist()
       }
       .start()
@@ -88,11 +83,9 @@ object StreamingIngest {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val table = LakeTable.ensure(batch.sparkSession, targetLocation,
-            batch.schema, identifierFields = mergeOn)
-          table.merge(batch, mergeOn) // skip write()'s second isEmpty probe
-        }
+        if (!batch.isEmpty)
+          LakeTable.ensure(batch.sparkSession, targetLocation, batch.schema,
+            identifierFields = mergeOn).write(batch, "merge", mergeOn)
       }
       .start()
     query.awaitTermination()

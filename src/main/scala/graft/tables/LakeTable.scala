@@ -16,6 +16,13 @@ import graft.types.SchemaEvolution
   * and sort-order specs, table properties committed atomically with data,
   * snapshot log, and maintenance procedures.
   *
+  * One write path: every data write (append, replace, merge, delete,
+  * update, compaction, WAP stage) writes a snapshot directory and commits
+  * it through one CAS loop. There is one merge engine, the SQL clause
+  * matrix of [[mergeClauses]]; the upsert is its `UPDATE SET *` +
+  * `INSERT *` clause set. Skip-empty is decided once, after the write, in
+  * that commit.
+  *
   * Commit protocol: snapshots carry the complete data-file list; a commit
   * built from version N CASes `metadata/v{N+1}.json` into existence (atomic
   * hard link — exactly one writer owns each version) and then advances the
@@ -97,9 +104,15 @@ final class LakeTable private (spark: SparkSession, val location: String) {
           s"Commit conflict on '$location': version $next was committed concurrently")
     } finally Files.deleteIfExists(tmp)
     // advance the hint; readers recover from regressions by probing
+    writeVersionHint(next)
+  }
+
+  /** Point the `VERSION` hint at `v` with an atomic rename. The hint is
+    * advisory: readers probe past it. */
+  private def writeVersionHint(v: Int): Unit = {
     val vtmp = metadataDir.resolve(
       s"VERSION.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(vtmp, next.toString.getBytes)
+    Files.write(vtmp, v.toString.getBytes)
     Files.move(vtmp, metadataDir.resolve("VERSION"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
@@ -111,21 +124,20 @@ final class LakeTable private (spark: SparkSession, val location: String) {
   private[tables] def repairVersionHint(): Unit = {
     if (Files.exists(metadataDir.resolve("VERSION"))) return
     val v = version
-    if (v <= 0) return
-    val vtmp = metadataDir.resolve(
-      s"VERSION.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(vtmp, v.toString.getBytes)
-    Files.move(vtmp, metadataDir.resolve("VERSION"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    if (v > 0) writeVersionHint(v)
   }
 
   /** Retry loop for metadata-only transactions (properties, DDL, snapshot
-    * expiry): these rebase trivially — re-read, re-apply, re-CAS. */
+    * expiry): these rebase trivially — re-read, re-apply, re-CAS. A
+    * transaction that changes nothing (an expiry with nothing to expire)
+    * commits nothing. */
   private def commitRetry(f: TableMetadata => TableMetadata): Unit = {
     var attempt = 0
     while (true) {
       val (base, meta) = metadataAt
-      try { commitCas(base, f(meta)); return }
+      val next = f(meta)
+      if (next == meta) return
+      try { commitCas(base, next); return }
       catch {
         case e: ConcurrentCommitException =>
           attempt += 1
@@ -348,139 +360,50 @@ final class LakeTable private (spark: SparkSession, val location: String) {
 
   // ---- write path ---------------------------------------------------
 
-  /** Write-mode dispatcher with the reference's rules: zero-row data is
-    * skipped entirely (`io.py:86-88`), schema evolves add-only before any
-    * write, properties land in the same commit as the data. */
+  /** Write-mode dispatcher with the reference's rules: schema evolves
+    * add-only before any write, properties land in the same commit as the
+    * data, and zero-row data is skipped (`io.py:86-88`). Skip-empty is
+    * decided after the write, in [[commitDataFiles]], so the source plan
+    * runs once: there is no emptiness probe ahead of the write. */
   def write(df: DataFrame, mode: String,
             mergeOn: Seq[String] = Nil,
-            properties: Map[String, String] = Map.empty): Unit = {
-    mode match {
-      // L4 skip-empty for appends is enforced AFTER the write (zero rows
-      // written -> no commit, directory cleaned): an isEmpty pre-probe
-      // would execute the source plan twice per INSERT
-      case "append" => append(df, properties)
-      case "replace" | "merge" if df.isEmpty =>
-        // L4: skip-empty (io.py:86-88) — data is skipped, but the
-        // properties payload still commits: an index rebuild over an empty
-        // corpus must refresh its build stamp, not leave a stale one.
-        // Unknown mode strings fall through to the error below even when
-        // the frame is empty.
-        if (properties.nonEmpty) writeProperties(properties)
-      case "replace" => replace(df, properties)
-      case "merge" =>
-        // Keyless merge falls back to the table's stored identifier fields
-        // (reference: merge keys persisted at create, `helpers.py:184-187`,
-        // read back to drive the upsert, `pyiceberg.py:358-361`).
-        val keys = if (mergeOn.nonEmpty) mergeOn else metadata.identifierFields
-        if (keys.isEmpty)
-          throw new IllegalArgumentException(
-            s"Table '$location': write mode 'merge' requires 'merge_on' property " +
-              "or identifier fields stored on the table.")
-        merge(df, keys, properties)
-      case other => throw new IllegalArgumentException(s"Unsupported write mode: '$other'")
-    }
+            properties: Map[String, String] = Map.empty): Unit = mode match {
+    case "append" => append(df, properties)
+    case "replace" => replace(df, properties)
+    case "merge" =>
+      // Keyless merge falls back to the table's stored identifier fields
+      // (reference: merge keys persisted at create, `helpers.py:184-187`,
+      // read back to drive the upsert, `pyiceberg.py:358-361`).
+      val keys = if (mergeOn.nonEmpty) mergeOn else metadata.identifierFields
+      if (keys.isEmpty)
+        throw new IllegalArgumentException(
+          s"Table '$location': write mode 'merge' requires 'merge_on' property " +
+            "or identifier fields stored on the table.")
+      merge(df, keys, properties)
+    case other => throw new IllegalArgumentException(s"Unsupported write mode: '$other'")
   }
 
   def append(df: DataFrame, properties: Map[String, String] = Map.empty): Unit =
-    commitData(df, "append", keepExisting = true, properties)
+    commitData(df, "append", keepExisting = true, properties, skipEmpty = true)
 
   def replace(df: DataFrame, properties: Map[String, String] = Map.empty): Unit =
-    commitData(df, "replace", keepExisting = false, properties)
+    commitData(df, "replace", keepExisting = false, properties, skipEmpty = true)
 
   /** Upsert: matched rows (null-safe key equality) take ALL columns from the
     * new data; unmatched new rows are inserted; unmatched existing rows are
     * kept — PyIceberg's `upsert(when_matched_update_all,
-    * when_not_matched_insert_all)` (`io.py:95-106`).
-    *
-    * Copy-on-write on touched files only: the source's key bounds (one
-    * O(delta) agg job) intersect each manifest entry's column bounds; files
-    * that cannot contain a matched key are carried into the new snapshot
-    * VERBATIM, and the full-outer-join rewrite reads only the touched
-    * files. A small delta into a large table costs O(delta + touched), not
-    * O(table) — Iceberg's upsert cost model (data files without matched
-    * keys are never rewritten). */
+    * when_not_matched_insert_all)` (`io.py:95-106`). After add-only schema
+    * evolution it is exactly that clause set run through the
+    * [[mergeClauses]] engine, with PyIceberg's stricter duplicate rule:
+    * ANY duplicate source key raises, matched or not. */
   def merge(df: DataFrame, keys: Seq[String],
             properties: Map[String, String] = Map.empty): Unit = {
+    import MergeClauses._
     val (base, meta) = evolveIfNeeded(df.schema)
-    if (meta.currentSnapshot.forall(_.files.isEmpty)) {
-      // Merge into an EMPTY table is insert-all: the full-outer join
-      // against a zero-file target, the source bounds job and the
-      // keyset probe all reduce to the identity, so skip them (the
-      // FIRST drain of every streaming merge gate lands here — guide
-      // §2.4, remove work outright). The duplicate-source-key guard is
-      // NOT skippable: PyIceberg's upsert rejects duplicate join-column
-      // source rows regardless of target state, and the in-plan window
-      // guard preserves that contract byte-for-byte.
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keys.map(col).toIndexedSeq: _*)
-      val dupMsg = s"$DupMarker for key(s) ${keys.mkString(", ")}"
-      val aligned = alignTo(df, meta.schema)
-        .withColumn("__src_cnt", count(lit(1)).over(w))
-      val merged = aligned
-        .select(meta.schema.fieldNames.zipWithIndex.map { case (c, i) =>
-          val value = col(c)
-          (if (i == 0) when(col("__src_cnt") > 1, raise_error(lit(dupMsg)))
-            .otherwise(value) else value).as(c)
-        }.toIndexedSeq: _*)
-      try commitData(merged, "merge", keepExisting = false, properties,
-        preEvolved = Some((base, meta)))
-      catch {
-        case e: Throwable if causeChain(e).exists(
-            m => m != null && m.contains(DupMarker)) =>
-          throw new IllegalArgumentException(dupMsg)
-      }
-      return
-    }
-    // Persisted: the source plan feeds the bounds job AND the merge join,
-    // and extractor plans can be expensive to recompute.
-    val alignedSrc = alignTo(df, meta.schema)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val bounds = sourceKeyBounds(alignedSrc, meta.schema, keys)
-      val zone = spark.sessionState.conf.sessionLocalTimeZone
-      val (boundTouched, boundCarry) =
-        meta.currentSnapshot.map(_.files).getOrElse(Nil).partition(f =>
-          FileStats.touches(
-            FileStats.withPartitionStats(f, meta, zone), bounds))
-      // transform-partitioned key refinement: bucket/truncate partitions
-      // are invisible to key-range bounds, but the delta's distinct keys
-      // project onto an exact partition-value set when few enough
-      val (touched, keysetCarry) =
-        transformKeysetSplit(alignedSrc, meta, keys, boundTouched)
-      val untouched = boundCarry ++ keysetCarry
-
-      // PyIceberg upsert rejects duplicate join-column rows in the source —
-      // a silent full-outer-join row multiplication would corrupt the table
-      // (SURVEY §7.4 risk 1). The check is folded into the merge pass itself:
-      // a window count over the merge keys (whose exchange the join reuses —
-      // both shuffle on the same keys) feeds an in-plan guard, so the source
-      // is NOT scanned by a separate detection job. The guard trips inside
-      // the write job, before any metadata commit.
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keys.map(col).toIndexedSeq: _*)
-      val aligned = alignedSrc
-        .withColumn("__is_src", lit(1))
-        .withColumn("__src_cnt", count(lit(1)).over(w))
-      val target = readWithPartitions(meta, Some(touched))
-        .select(meta.schema.fieldNames.map(col).toIndexedSeq: _*)
-      val cond = keys.map(k => target(k) <=> aligned(k)).reduce(_ && _)
-      val dupMsg = s"$DupMarker for key(s) ${keys.mkString(", ")}"
-      val merged = target.join(aligned, cond, "full_outer")
-        .select(meta.schema.fieldNames.zipWithIndex.map { case (c, i) =>
-          val value = when(aligned("__is_src").isNotNull, aligned(c))
-            .otherwise(target(c))
-          // guard rides on the first output column so pruning can't drop it
-          (if (i == 0) when(aligned("__src_cnt") > 1, raise_error(lit(dupMsg)))
-            .otherwise(value) else value).as(c)
-        }.toIndexedSeq: _*)
-      try commitData(merged, "merge", keepExisting = false, properties,
-        preEvolved = Some((base, meta)), carryFiles = untouched)
-      catch {
-        case e: Throwable if causeChain(e).exists(
-            m => m != null && m.contains(DupMarker)) =>
-          throw new IllegalArgumentException(dupMsg)
-      }
-    } finally alignedSrc.unpersist()
+    val all = meta.schema.fieldNames.map(c => c -> s(c)).toMap
+    mergeCore(alignTo(df, meta.schema), keys, base, meta,
+      Seq(Update(None, all)), Seq(Insert(None, all)), Nil, properties,
+      anyDuplicateRaises = true)
   }
 
   /** General `MERGE INTO` (SQL-standard clause semantics): ordered
@@ -490,15 +413,8 @@ final class LakeTable private (spark: SparkSession, val location: String) {
     * clause claims keep their current state (matched / by-source) or are
     * dropped (unmatched source rows). Clause conditions and assignment
     * values reference the target row via [[MergeClauses.t]] and the
-    * source row via [[MergeClauses.s]].
-    *
-    * Same copy-on-write economics as [[merge]]: only files that can
-    * contain a source key are rewritten (bounds + transform-keyset
-    * pruning), the rest carry verbatim — EXCEPT when
-    * `notMatchedBySource` clauses exist, which read every target row's
-    * match state and so rewrite the whole table (the SQL shape itself is
-    * O(table); there is nothing to prune). Duplicate source keys
-    * matching one target row raise (in-plan guard, before any commit). */
+    * source row via [[MergeClauses.s]]. Duplicate source keys matching
+    * one target row raise (in-plan guard, before any commit). */
   def mergeClauses(src: DataFrame, keys: Seq[String],
                    matched: Seq[MergeClauses.Clause] = Nil,
                    notMatched: Seq[MergeClauses.Insert] = Nil,
@@ -520,135 +436,155 @@ final class LakeTable private (spark: SparkSession, val location: String) {
     notMatched.foreach(ins => ins.values.keys.foreach(c =>
       require(meta.schema.fieldNames.contains(c), s"INSERT into unknown column '$c'")))
     if (matched.isEmpty && notMatched.isEmpty && notMatchedBySource.isEmpty) return
-
     // keys join/prune with the TARGET column types
     val srcK = keys.foldLeft(src)((d, k) =>
       d.withColumn(k, col(k).cast(meta.schema(k).dataType)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    mergeCore(srcK, keys, base, meta, matched, notMatched, notMatchedBySource,
+      Map.empty, anyDuplicateRaises = false)
+  }
+
+  /** The one merge engine, behind [[merge]] and [[mergeClauses]].
+    *
+    * Copy-on-write on touched files only: one O(delta) agg job takes the
+    * source's row count and key bounds, which intersect each manifest
+    * entry's column bounds; files that cannot contain a source key carry
+    * into the new snapshot verbatim, and only touched files are read. A
+    * small delta into a large table costs O(delta + touched), not
+    * O(table) — Iceberg's upsert cost model. `notMatchedBySource` clauses
+    * read every target row's match state, so they rewrite the whole table
+    * (the SQL shape itself is O(table); there is nothing to prune).
+    *
+    * With no touched file (an empty table, an empty source, or keys
+    * outside every file's bounds) no target row can change, so the
+    * source's inserts are written with no join; an empty table also skips
+    * the bounds job. Without matched or by-source clauses the inserts
+    * anti-join a key-only scan of the touched files. Everything else is
+    * one full outer join of the touched target rows with the source.
+    *
+    * Duplicate source keys raise from an in-plan window guard inside the
+    * write job, before any commit: on matched rows (SQL MERGE), or on
+    * every source row when `anyDuplicateRaises` (PyIceberg's upsert —
+    * a silent full-outer-join row multiplication would corrupt the table,
+    * SURVEY §7.4 risk 1). */
+  private def mergeCore(src: DataFrame, keys: Seq[String],
+                        base: Int, meta: TableMetadata,
+                        matched: Seq[MergeClauses.Clause],
+                        notMatched: Seq[MergeClauses.Insert],
+                        notMatchedBySource: Seq[MergeClauses.Clause],
+                        properties: Map[String, String],
+                        anyDuplicateRaises: Boolean): Unit = {
+    import MergeClauses._
+    val files = meta.currentSnapshot.map(_.files).getOrElse(Nil)
+    val prune = files.nonEmpty && notMatchedBySource.isEmpty
+    // Persisted when pruning: the source then feeds the bounds job, the
+    // keyset probe AND the merge, and extractor plans can be expensive to
+    // recompute.
+    val source =
+      if (prune) src.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else src
     try {
-      val files = meta.currentSnapshot.map(_.files).getOrElse(Nil)
       val (touched, untouched) =
-        if (notMatchedBySource.nonEmpty) (files, Seq.empty[DataFile])
+        if (!prune) (files, Seq.empty[DataFile])
         else {
-          val bounds = sourceKeyBounds(srcK, meta.schema, keys)
-          val zone = spark.sessionState.conf.sessionLocalTimeZone
-          val (bt, bc) = files.partition(f => FileStats.touches(
-            FileStats.withPartitionStats(f, meta, zone), bounds))
-          val (tt, kc) = transformKeysetSplit(srcK, meta, keys, bt)
-          (tt, bc ++ kc)
+          val (rows, bounds) = sourceKeyBounds(source, meta.schema, keys)
+          if (rows == 0) (Nil, files)
+          else {
+            val zone = spark.sessionState.conf.sessionLocalTimeZone
+            val (bt, bc) = files.partition(f => FileStats.touches(
+              FileStats.withPartitionStats(f, meta, zone), bounds))
+            val (tt, kc) = transformKeysetSplit(source, meta, keys, bt)
+            (tt, bc ++ kc)
+          }
         }
       if (touched.isEmpty && notMatched.isEmpty) return
+      val insertOnly = touched.isEmpty || (matched.isEmpty && notMatchedBySource.isEmpty)
 
-      // insert-if-absent fast path: with no matched / by-source clauses,
-      // no target row can change — anti-join the source against a
-      // KEY-COLUMN-ONLY scan of the touched files and append the
-      // surviving inserts (O(delta) write, zero files rewritten)
-      if (matched.isEmpty && notMatchedBySource.isEmpty) {
-        val existingKeys = readWithPartitions(meta, Some(touched))
-          .select(keys.map(k => col(k).as(TargetPrefix + k)).toIndexedSeq: _*)
-        val sFrame0 = srcK.select(srcK.columns.map(c =>
-          col(c).as(SourcePrefix + c)).toIndexedSeq: _*)
-        // null-safe key match, like the general clause frame
-        val fresh = sFrame0.join(existingKeys,
-          keys.map(k => col(SourcePrefix + k) <=> col(TargetPrefix + k))
-            .reduce(_ && _), "left_anti")
-        def firstInsertIdx: Column =
-          notMatched.zipWithIndex.foldRight(lit(-1)) { case ((cl, i), acc) =>
-            when(coalesce(cl.condition.getOrElse(lit(true)), lit(false)), lit(i))
-              .otherwise(acc)
-          }
-        val rows = fresh.withColumn("__ni", firstInsertIdx)
-          .where(col("__ni") =!= -1)
-          .select(meta.schema.fields.map { f =>
-            notMatched.zipWithIndex.foldLeft(lit(null).cast(f.dataType)) {
-              case (acc, (ins, j)) => ins.values.get(f.name) match {
-                case Some(v) => when(col("__ni") === j, v.cast(f.dataType)).otherwise(acc)
-                case None => acc
-              }
-            }.as(f.name)
-          }.toIndexedSeq: _*)
-        if (!rows.isEmpty)
-          commitData(rows, "merge", keepExisting = true, Map.empty,
-            preEvolved = Some((base, meta)))
-        return
-      }
-
-      val target = readWithPartitions(meta, Some(touched))
-        .select(meta.schema.fieldNames.map(col).toIndexedSeq: _*)
-      val tFrame = target
-        .select(meta.schema.fieldNames.map(c =>
-          col(c).as(TargetPrefix + c)).toIndexedSeq: _*)
-        .withColumn(TargetPrefix + "present", lit(1))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(keys.map(k => col(SourcePrefix + k)).toIndexedSeq: _*)
-      val sFrame = srcK
-        .select(srcK.columns.map(c =>
-          col(c).as(SourcePrefix + c)).toIndexedSeq: _*)
+      val sFrame = source
+        .select(source.columns.map(c => col(c).as(SourcePrefix + c)).toIndexedSeq: _*)
         .withColumn(SourcePrefix + "present", lit(1))
         .withColumn(SourcePrefix + "cnt", count(lit(1)).over(w))
-      val joinCond = keys.map(k =>
+      val keyMatch = keys.map(k =>
         col(TargetPrefix + k) <=> col(SourcePrefix + k)).reduce(_ && _)
-      val joined = tFrame.join(sFrame, joinCond, "full_outer")
-
-      val isMatched = col(TargetPrefix + "present").isNotNull &&
-        col(SourcePrefix + "present").isNotNull
-      val srcOnly = col(TargetPrefix + "present").isNull &&
-        col(SourcePrefix + "present").isNotNull
+      def targetFrame(cols: Seq[String]): DataFrame =
+        readWithPartitions(meta, Some(touched))
+          .select(cols.map(c => col(c).as(TargetPrefix + c)).toIndexedSeq: _*)
       // first clause whose condition holds (NULL = not satisfied)
       def firstIdx(cs: Seq[Clause]): Column =
         cs.zipWithIndex.foldRight(lit(-1)) { case ((cl, i), acc) =>
           when(coalesce(cl.condition.getOrElse(lit(true)), lit(false)), lit(i))
             .otherwise(acc)
         }
-      val frame = joined
-        .withColumn("__mi", when(isMatched, firstIdx(matched)).otherwise(lit(-1)))
-        .withColumn("__ni", when(srcOnly, firstIdx(notMatched)).otherwise(lit(-1)))
-        .withColumn("__bi", when(!isMatched && !srcOnly,
-          firstIdx(notMatchedBySource)).otherwise(lit(-1)))
-
-      def notDeleted(idx: Column, cs: Seq[Clause]): Column = {
-        val dels = cs.zipWithIndex.collect { case (_: Delete, i) => i }
-        if (dels.isEmpty) lit(true) else !idx.isin(dels: _*)
-      }
-      val keep = when(isMatched, notDeleted(col("__mi"), matched))
-        .when(srcOnly, col("__ni") =!= -1)
-        .otherwise(notDeleted(col("__bi"), notMatchedBySource))
-
-      def updateChain(cs: Seq[Clause], idx: Column, base: Column,
-                      f: org.apache.spark.sql.types.StructField): Column =
-        cs.zipWithIndex.foldLeft(base) { case (acc, (cl, j)) => cl match {
-          case Update(_, set) => set.get(f.name) match {
-            case Some(v) => when(idx === j, v.cast(f.dataType)).otherwise(acc)
-            case None => acc
-          }
-          case _ => acc
-        }}
-      val dupMsg = s"$DupMarker for key(s) ${keys.mkString(", ")}"
-      val outCols = meta.schema.fields.zipWithIndex.map { case (f, i) =>
-        val keepVal = col(TargetPrefix + f.name)
-        val mVal = updateChain(matched, col("__mi"), keepVal, f)
-        val nVal = notMatched.zipWithIndex.foldLeft(lit(null).cast(f.dataType)) {
+      def insertValue(f: StructField): Column =
+        notMatched.zipWithIndex.foldLeft(lit(null).cast(f.dataType)) {
           case (acc, (ins, j)) => ins.values.get(f.name) match {
             case Some(v) => when(col("__ni") === j, v.cast(f.dataType)).otherwise(acc)
             case None => acc
           }
         }
-        val bVal = updateChain(notMatchedBySource, col("__bi"), keepVal, f)
-        val value = when(isMatched, mVal).when(srcOnly, nVal).otherwise(bVal)
-        (if (i == 0)
-          when(isMatched && col(SourcePrefix + "cnt") > 1,
-            raise_error(lit(dupMsg))).otherwise(value)
-         else value).as(f.name)
+      val dupMsg = s"$DupMarker for key(s) ${keys.mkString(", ")}"
+      def guarded(frame: DataFrame, isMatched: Column)(value: StructField => Column) = {
+        val dupHit = (if (anyDuplicateRaises) lit(true) else isMatched) &&
+          col(SourcePrefix + "cnt") > 1
+        frame.select(meta.schema.fields.zipWithIndex.map { case (f, i) =>
+          // the guard rides on the first output column so pruning can't drop it
+          (if (i == 0) when(dupHit, raise_error(lit(dupMsg))).otherwise(value(f))
+           else value(f)).as(f.name)
+        }.toIndexedSeq: _*)
       }
-      val result = frame.filter(keep).select(outCols.toIndexedSeq: _*)
-      try commitData(result, "merge", keepExisting = false, Map.empty,
-        preEvolved = Some((base, meta)), carryFiles = untouched)
+
+      val (result, carry) =
+        if (insertOnly) {
+          val fresh =
+            if (touched.isEmpty) sFrame
+            else sFrame.join(targetFrame(keys), keyMatch, "left_anti")
+          (guarded(fresh.withColumn("__ni", firstIdx(notMatched))
+            .where(col("__ni") =!= -1), lit(false))(insertValue), files)
+        } else {
+          val joined = targetFrame(meta.schema.fieldNames.toIndexedSeq)
+            .withColumn(TargetPrefix + "present", lit(1))
+            .join(sFrame, keyMatch, "full_outer")
+          val isMatched = col(TargetPrefix + "present").isNotNull &&
+            col(SourcePrefix + "present").isNotNull
+          val srcOnly = col(TargetPrefix + "present").isNull &&
+            col(SourcePrefix + "present").isNotNull
+          val frame = joined
+            .withColumn("__mi", when(isMatched, firstIdx(matched)).otherwise(lit(-1)))
+            .withColumn("__ni", when(srcOnly, firstIdx(notMatched)).otherwise(lit(-1)))
+            .withColumn("__bi", when(!isMatched && !srcOnly,
+              firstIdx(notMatchedBySource)).otherwise(lit(-1)))
+          def notDeleted(idx: Column, cs: Seq[Clause]): Column = {
+            val dels = cs.zipWithIndex.collect { case (_: Delete, i) => i }
+            if (dels.isEmpty) lit(true) else !idx.isin(dels: _*)
+          }
+          val keep = when(isMatched, notDeleted(col("__mi"), matched))
+            .when(srcOnly, col("__ni") =!= -1)
+            .otherwise(notDeleted(col("__bi"), notMatchedBySource))
+          def updateChain(cs: Seq[Clause], idx: Column, base: Column,
+                          f: StructField): Column =
+            cs.zipWithIndex.foldLeft(base) { case (acc, (cl, j)) => cl match {
+              case Update(_, set) => set.get(f.name) match {
+                case Some(v) => when(idx === j, v.cast(f.dataType)).otherwise(acc)
+                case None => acc
+              }
+              case _ => acc
+            }}
+          (guarded(frame.filter(keep), isMatched) { f =>
+            val keepVal = col(TargetPrefix + f.name)
+            when(isMatched, updateChain(matched, col("__mi"), keepVal, f))
+              .when(srcOnly, insertValue(f))
+              .otherwise(updateChain(notMatchedBySource, col("__bi"), keepVal, f))
+          }, untouched)
+        }
+      try commitData(result, "merge", keepExisting = false, properties,
+        preEvolved = Some((base, meta)), carryFiles = carry, skipEmpty = insertOnly)
       catch {
         case e: Throwable if causeChain(e).exists(
             m => m != null && m.contains(DupMarker)) =>
           throw new IllegalArgumentException(dupMsg)
       }
-    } finally srcK.unpersist()
+    } finally if (prune) source.unpersist()
   }
 
   /** Row-level DELETE with the same copy-on-write economics as merge:
@@ -758,27 +694,29 @@ final class LakeTable private (spark: SparkSession, val location: String) {
     else touched.partition(f => TransformPruning.prune(Seq(f), allowed).nonEmpty)
   }
 
-  /** Encoded min/max/has-null of each merge-key column over the source —
-    * the probe side of the touched-file split. Bounds become `unknown`
-    * (match everything) for unsupported types or unencodable values. */
+  /** The source's row count and the encoded min/max/has-null of each
+    * merge-key column, in one job — the probe side of the touched-file
+    * split. Bounds become `unknown` (match everything) for unsupported
+    * types or unencodable values. */
   private def sourceKeyBounds(src: DataFrame, schema: StructType,
-                              keys: Seq[String]): Map[String, FileStats.KeyBounds] = {
-    val aggs = keys.flatMap(k => Seq(min(col(k)).as(s"__min_$k"),
-      max(col(k)).as(s"__max_$k"), sum(col(k).isNull.cast("long")).as(s"__null_$k")))
+      keys: Seq[String]): (Long, Map[String, FileStats.KeyBounds]) = {
+    val aggs = count(lit(1)).as("__rows") +: keys.flatMap(k => Seq(
+      min(col(k)).as(s"__min_$k"), max(col(k)).as(s"__max_$k"),
+      sum(col(k).isNull.cast("long")).as(s"__null_$k")))
     val row = src.agg(aggs.head, aggs.tail: _*).head()
-    keys.zipWithIndex.map { case (k, i) =>
+    row.getLong(0) -> keys.zipWithIndex.map { case (k, i) =>
       val dt = schema(k).dataType
       if (!FileStats.supported(dt))
         k -> FileStats.KeyBounds(dt, None, None, hasNull = false, unknown = true)
       else {
-        val mnRaw = row.get(3 * i)
-        val mxRaw = row.get(3 * i + 1)
+        val mnRaw = row.get(3 * i + 1)
+        val mxRaw = row.get(3 * i + 2)
         val mn = Option(mnRaw).flatMap(FileStats.encode(_, dt))
         val mx = Option(mxRaw).flatMap(FileStats.encode(_, dt))
         // a non-null value that failed to encode leaves the true range
         // unknowable -> never prune on this column
         val unknown = (mnRaw != null && mn.isEmpty) || (mxRaw != null && mx.isEmpty)
-        val nulls = if (row.isNullAt(3 * i + 2)) 0L else row.getLong(3 * i + 2)
+        val nulls = if (row.isNullAt(3 * i + 3)) 0L else row.getLong(3 * i + 3)
         k -> FileStats.KeyBounds(dt, mn, mx, hasNull = nulls > 0, unknown = unknown)
       }
     }.toMap
@@ -826,20 +764,20 @@ final class LakeTable private (spark: SparkSession, val location: String) {
   private def commitData(df: DataFrame, op: String, keepExisting: Boolean,
                          properties: Map[String, String],
                          preEvolved: Option[(Int, TableMetadata)] = None,
-                         carryFiles: Seq[DataFile] = Nil): Unit = {
+                         carryFiles: Seq[DataFile] = Nil,
+                         skipEmpty: Boolean = false): Unit = {
     val (base, meta) = preEvolved.getOrElse(evolveIfNeeded(df.schema))
-    val snapId = nextSnapshotId(meta)
-    val snapRel = writeSnapshotDir(df, op, meta, s"snap-$snapId")
+    val snapRel = writeSnapshotDir(df, meta, s"snap-${nextSnapshotId(meta)}")
     commitDataFiles(op, keepExisting, properties, carryFiles,
-      base, meta, snapRel)
+      base, meta, snapRel, skipEmpty)
   }
 
   /** Write the delta under a `data/<dirName>` directory (uniquified only
     * when a concurrent writer already claimed the deterministic name) and
     * return the relative path. Our own failed partial writes are cleaned
     * up; a pre-existing directory belongs to someone else and is not. */
-  private def writeSnapshotDir(df: DataFrame, op: String,
-                               meta: TableMetadata, dirName: String): String = {
+  private def writeSnapshotDir(df: DataFrame, meta: TableMetadata,
+                               dirName: String): String = {
     val aligned = alignTo(df, meta.schema)
 
     // Derived partition columns + write-layout sort (sort is write-layout
@@ -899,22 +837,32 @@ final class LakeTable private (spark: SparkSession, val location: String) {
   }
 
   /** Manifest commit of a written snapshot directory, CASed against the
-    * base version. Appends rebase on conflict (re-read, recompute the
-    * kept file list, re-CAS — the delta is order-independent); every
-    * other op computed its output FROM the base state, so a conflict
-    * aborts with the snapshot directory cleaned up. */
+    * base version. Appends (`keepExisting`) rebase on conflict (re-read,
+    * recompute the kept file list, re-CAS — the delta is
+    * order-independent); every other op computed its output FROM the base
+    * state, so a conflict aborts with the snapshot directory cleaned up.
+    * A staged commit (`publish = false`) adds its snapshot without moving
+    * the current pointer, and its operation records the base snapshot it
+    * was computed against. Returns the committed snapshot id (the
+    * unchanged current id when skipped).
+    *
+    * Skip-empty (L4, `io.py:86-88`) is decided here, after the write,
+    * for every write mode: a `skipEmpty` write that produced no rows
+    * leaves no snapshot or directory behind. A replace or merge still
+    * commits its properties (an index rebuild over an empty corpus must
+    * refresh its build stamp, not leave a stale one); an append commits
+    * nothing. */
   private def commitDataFiles(op: String, keepExisting: Boolean,
                               properties: Map[String, String],
                               carryFiles: Seq[DataFile],
                               base0: Int, meta0: TableMetadata,
-                              snapRel: String): Unit = {
+                              snapRel: String, skipEmpty: Boolean,
+                              publish: Boolean = true): Long = {
     val newFiles = newFileEntries(snapRel, meta0)
-    // L4 skip-empty, enforced post-write: a zero-row append commits
-    // nothing and leaves no snapshot directory behind. (Post-write, not a
-    // df.isEmpty pre-probe, so the source plan executes exactly once.)
-    if (op == "append" && newFiles.forall(_.rowCount == 0)) {
+    if (skipEmpty && newFiles.forall(_.rowCount == 0)) {
       deleteRecursively(Paths.get(location, snapRel))
-      return
+      if (!keepExisting && properties.nonEmpty) writeProperties(properties)
+      return meta0.currentSnapshotId
     }
     var base = base0
     var meta = meta0
@@ -925,13 +873,14 @@ final class LakeTable private (spark: SparkSession, val location: String) {
       // carryFiles: untouched files a copy-on-write merge carries forward
       // verbatim (manifest entries, bounds and all)
       val snap = Snapshot(nextSnapshotId(meta), System.currentTimeMillis(),
-        op, carryFiles ++ oldFiles ++ newFiles, Some(meta0.schema.json))
+        if (publish) op else s"$op-base-${meta.currentSnapshotId}",
+        carryFiles ++ oldFiles ++ newFiles, Some(meta0.schema.json))
       try {
         commitCas(base, meta.copy(
           snapshots = meta.snapshots :+ snap,
-          currentSnapshotId = snap.id,
+          currentSnapshotId = if (publish) snap.id else meta.currentSnapshotId,
           properties = meta.properties ++ properties))
-        return
+        return snap.id
       } catch {
         case e: ConcurrentCommitException =>
           attempt += 1
@@ -948,6 +897,7 @@ final class LakeTable private (spark: SparkSession, val location: String) {
           base = b2; meta = m2
       }
     }
+    sys.error("unreachable")
   }
 
   /** Manifest entries for the files just written under `snapRel`: partition
@@ -1149,6 +1099,8 @@ final class LakeTable private (spark: SparkSession, val location: String) {
     // come from the same version, or a commit landing in between would
     // be silently dropped by the rewrite
     val (base, meta) = metadataAt
+    // no live data: nothing to rewrite, so no (empty) compact commit
+    if (meta.currentSnapshot.forall(_.files.isEmpty)) return
     val current = readWithPartitions(meta, None)
       .select(meta.schema.fieldNames.map(col).toIndexedSeq: _*)
     // preEvolved: an internal rewrite of existing data never re-validates
@@ -1289,39 +1241,14 @@ final class LakeTable private (spark: SparkSession, val location: String) {
   def stageAppend(df: DataFrame,
                   properties: Map[String, String] = Map.empty): Long = {
     val (base, meta) = evolveIfNeeded(df.schema)
-    // Staged directories are UUID-named, never snap-<id>: the CAS-rebase
-    // loop below can commit under a LATER id than first computed, and a
+    // Staged directories are UUID-named, never snap-<id>: the commit's
+    // CAS-rebase loop can commit under a LATER id than first computed, and a
     // directory name that implies a stale id would mislead orphan GC
     // debugging (files are path-referenced, so nothing else cares).
-    val snapRel = writeSnapshotDir(df, "wap-append", meta,
+    val snapRel = writeSnapshotDir(df, meta,
       s"wap-${java.util.UUID.randomUUID().toString.take(16)}")
-    val newFiles = newFileEntries(snapRel, meta)
-    var b = base
-    var m = meta
-    var attempt = 0
-    while (true) {
-      val cur = m.currentSnapshot.map(_.files).getOrElse(Nil)
-      val snap = Snapshot(nextSnapshotId(m), System.currentTimeMillis(),
-        s"wap-append-base-${m.currentSnapshotId}", cur ++ newFiles,
-        Some(meta.schema.json))
-      try {
-        commitCas(b, m.copy(snapshots = m.snapshots :+ snap,
-          properties = m.properties ++ properties))
-        return snap.id
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          val (b2, m2) = metadataAt
-          if (attempt > LakeTable.MaxCommitRetries || m2.schema != meta.schema) {
-            deleteRecursively(Paths.get(location, snapRel))
-            throw new ConcurrentCommitException(
-              s"wap-append on '$location' lost a commit race and cannot " +
-                s"rebase: ${e.getMessage}")
-          }
-          b = b2; m = m2
-      }
-    }
-    -1L // unreachable
+    commitDataFiles("wap-append", keepExisting = true, properties, Nil,
+      base, meta, snapRel, skipEmpty = false, publish = false)
   }
 
   /** Make a staged WAP snapshot the current table state — one atomic
@@ -1424,11 +1351,7 @@ final class LakeTable private (spark: SparkSession, val location: String) {
     if (floor <= 1) return Nil
     // Refresh the hint BEFORE deleting: a reader that loads the hint after
     // this point starts at `cur` and never touches the trimmed range.
-    val vtmp = metadataDir.resolve(
-      s"VERSION.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(vtmp, cur.toString.getBytes)
-    Files.move(vtmp, metadataDir.resolve("VERSION"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    writeVersionHint(cur)
     (1 until floor).flatMap { v =>
       if (Files.deleteIfExists(metadataDir.resolve(s"v$v.json"))) Some(s"v$v.json")
       else None

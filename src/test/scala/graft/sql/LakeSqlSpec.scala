@@ -474,6 +474,32 @@ class LakeSqlSpec extends AnyFunSuite with SparkSpec {
     assert(df.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
   }
 
+  test("replace, merge and INSERT OVERWRITE evaluate their source plan once") {
+    val evaluated = spark.sparkContext.longAccumulator("source rows evaluated")
+    val counted = udf { (_: Long) => evaluated.add(1); true }.asNondeterministic()
+    // a range source: a filter over local rows would be folded by the
+    // optimizer on the driver, once per planned query
+    def src(from: Long, until: Long) = spark.range(from, until)
+      .select(col("id"), concat(lit("n"), col("id").cast("string")).as("name"),
+        col("id").cast("double").as("score"))
+      .filter(counted(col("id")))
+    def once(rows: Long)(write: => Unit): Unit = {
+      evaluated.reset()
+      write
+      assert(evaluated.value == rows, s"$rows source rows evaluated ${evaluated.value} times")
+    }
+    val t = ensureTable("ns1", "once")
+    once(3)(t.write(src(1, 4), "replace"))
+    once(2)(t.write(src(3, 5), "merge", Seq("id"))) // touches a file: joins
+    val fresh = ensureTable("ns1", "once_fresh")
+    once(2)(fresh.write(src(1, 3), "merge", Seq("id"))) // into an empty table
+    src(10, 14).createOrReplaceTempView("once_src")
+    once(4)(spark.sql("INSERT OVERWRITE lake.ns1.once SELECT * FROM once_src"))
+    assert(spark.sql("SELECT id FROM lake.ns1.once ORDER BY id").collect()
+      .map(_.getLong(0)).toSeq == (10L to 13L))
+    assert(fresh.read().count() == 2)
+  }
+
   test("MERGE INTO runs the transactional upsert (copy-on-write)") {
     val t = ensureTable("ns1", "mrg")
     t.write(Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0))

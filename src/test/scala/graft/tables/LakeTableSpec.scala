@@ -463,6 +463,34 @@ class LakeTableSpec extends AnyFunSuite with SparkSpec {
     t.write(df.limit(0), "append")
     assert(t.version == vBefore)
     assert(names(loc) == Seq("a"))
+    // every mode, into a non-empty and an empty table, with and without
+    // properties: no data snapshot lands and no directory is left behind;
+    // replace and merge still commit their properties, alone
+    val fresh = LakeTable.ensure(spark, tmpDir("lt_empty_fresh"), df.schema)
+    for (tbl <- Seq(t, fresh); mode <- Seq("append", "replace", "merge");
+         props <- Seq(Map.empty[String, String], Map("stamp" -> mode))) {
+      val (v, before) = (tbl.version, tbl.metadata)
+      val dirs = dataDirs(tbl.location)
+      tbl.write(df.limit(0), mode, Seq("id"), props)
+      val after = tbl.metadata
+      val what = s"$mode props=$props into ${tbl.location}"
+      assert(after.snapshots == before.snapshots, what)
+      assert(after.currentSnapshotId == before.currentSnapshotId, what)
+      assert(dataDirs(tbl.location) == dirs, what)
+      if (mode == "append" || props.isEmpty) assert(tbl.version == v, what)
+      else {
+        assert(tbl.version == v + 1, what)
+        assert(after.properties.get("stamp").contains(mode), what)
+      }
+    }
+    assert(names(loc) == Seq("a"))
+    assert(fresh.metadata.currentSnapshot.isEmpty)
+  }
+
+  private def dataDirs(loc: String): Seq[String] = {
+    val d = Paths.get(loc, "data")
+    if (!Files.exists(d)) Nil
+    else Files.list(d).iterator().asScala.map(_.getFileName.toString).toSeq.sorted
   }
 
   test("schema evolution on append: new column null-filled for old rows") {

@@ -49,4 +49,21 @@ class MaintenanceSpec extends AnyFunSuite with SparkSpec {
     assert(results.exists(r => r.table == "broken" && !r.ok))
     assert(catalog.loadTable(spark, wh, ns, "t1").read().count() == 2)
   }
+
+  test("runAll commits nothing to tables with no live data files") {
+    val catalog = new LakeCatalog(tmpDir("maint_empty_wh"))
+    val df = Seq((1L, "a")).toDF("id", "name")
+    // just created by ensure, and a stage with zero survivors (its
+    // properties committed, no data snapshot)
+    val created = catalog.ensureTable(spark, "w", "n", "created", df.schema)
+    val emptied = catalog.ensureTable(spark, "w", "n", "emptied", df.schema)
+    emptied.write(df.limit(0), "replace", properties = Map("stage" -> "1"))
+    val before = Seq(created.version, emptied.version)
+    for (_ <- 1 to 2) {
+      val results = Maintenance.runAll(spark, catalog, "w", "n")
+      assert(results.forall(_.ok), results)
+      assert(Seq(created.version, emptied.version) == before)
+    }
+    assert(created.metadata.snapshots.isEmpty && emptied.metadata.snapshots.isEmpty)
+  }
 }
