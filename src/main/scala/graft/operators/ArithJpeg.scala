@@ -17,8 +17,11 @@ package graft.operators
   * SOF10 (Annex G: spectral-selection bands, successive approximation
   * with DC fixed-bin refinement and the AC correction-bit model;
   * 1x1-sampled components), with DRI restart intervals and DAC
-  * conditioning overrides in both. Hierarchical (SOF11+) and 12-bit
-  * streams return None.
+  * conditioning overrides in both. This is the entropy back-end only:
+  * [[JpegFrame]] parses the headers (DAC included) and applies the header
+  * guards every process shares, and [[RasterCodec.decode]] routes
+  * SOF9/SOF10 frames here; [[decode]] returns None for a frame of any
+  * other process.
   *
   * Validation: the encoder/decoder pair is exercised coefficient-for-
   * coefficient against the Huffman twin ([[JpegCodec.encodeJpegGrayBlocks]]
@@ -30,7 +33,8 @@ package graft.operators
   */
 object ArithJpeg {
   import RasterCodec.Raster
-  import JpegCodec.{Bad, bad, Zigzag}
+  import JpegCodec.Zigzag
+  import JpegFrame.{bad, Comp}
 
   // ---- Table D.3: Qe values and probability estimation state machine ----
   // Rows: (Qe, NMPS, NLPS, SWITCH); index 113 is the fixed-probability
@@ -276,278 +280,96 @@ object ArithJpeg {
   // Annex F.2 sequential DCT statistical models (DC + AC) — decoder.
   // ------------------------------------------------------------------
 
-  private final case class AComp(id: Int, h: Int, v: Int, tq: Int,
-                                 var dcTab: Int = 0, var acTab: Int = 0,
-                                 var lastDc: Int = 0, var dcContext: Int = 0,
-                                 var plane: Array[Byte] = null,
-                                 var planeW: Int = 0)
+  def decode(p: Array[Byte]): Option[Raster] =
+    JpegFrame.decode(p, JpegFrame.Arithmetic)(decodeFrame)
 
-  def decode(p: Array[Byte]): Option[Raster] = {
-    if (p == null || p.length < 4 || (p(0) & 0xff) != 0xff ||
-      (p(1) & 0xff) != 0xd8) return None
-    try Some(run(p)) catch {
-      case _: Bad | _: ArrayIndexOutOfBoundsException |
-           _: NegativeArraySizeException => None
-    }
+  /** Fresh statistics areas, one per table id: DC 64 bins, AC 256 bins. */
+  private def dcBins(): Array[Array[Int]] = Array.fill(4)(new Array[Int](64))
+  private def acBins(): Array[Array[Int]] = Array.fill(4)(new Array[Int](256))
+
+  /** The QM decoder re-seated after the RSTn that ends restart interval
+    * `rst` (F.1.4.1). The byte feed may already have consumed the marker's
+    * 0xFF (renorm read-ahead); the search resumes AT the marker then. */
+  private def restart(p: Array[Byte], dec: QmDec, rst: Int): QmDec = {
+    val i = JpegFrame.nextMarker(p,
+      if (dec.markerSeen && dec.markerAt >= 0) dec.markerAt else dec.bp)
+    if (i < 0 || (p(i + 1) & 0xff) != 0xd0 + (rst & 7)) bad()
+    new QmDec(p, i + 2)
   }
 
-  private def run(p: Array[Byte]): Raster = {
-    def u8(i: Int) = if (i < p.length) p(i) & 0xff else bad()
-    def be16(i: Int) = (u8(i) << 8) | u8(i + 1)
+  private[operators] def decodeFrame(f: JpegFrame): Raster =
+    if (f.progressive) {
+      // ZIGZAG coefficients per component, built up across scans
+      val coefs = f.comps.map(c => new Array[Int](c.planeW * c.planeH))
+      do progressiveScan(f, coefs) while (f.nextScan())
+      JpegCodec.render(f, coefs)
+    } else {
+      val comps = f.comps
+      val quants = comps.map(f.quantFor)
+      comps.foreach(c => c.plane = new Array[Byte](c.planeW * c.planeH))
+      var dcStats = dcBins()
+      var acStats = acBins()
+      val fixedStats = Array(FixedBin) // context value: index 113, MPS 0
+      var dec = new QmDec(f.p, f.dataAt)
 
-    var width = 0
-    var height = 0
-    var comps: Array[AComp] = null
-    val quant = Array.ofDim[Int](4, 64)
-    val haveQuant = new Array[Boolean](4)
-    var restartInterval = 0
-    // conditioning: DC (L, U) and AC Kx per table id (defaults per F.1.4.4)
-    val dcL = Array.fill(4)(0)
-    val dcU = Array.fill(4)(1)
-    val acK = Array.fill(4)(5)
-
-    var progressive = false
-    // progressive accumulators: per component, wB*hB blocks of 64
-    // ZIGZAG-indexed coefficients built up across scans
-    var progCoef: Array[Array[Int]] = null
-    var progScans = 0
-    var wB = 0
-    var hB = 0
-
-    var at = 2
-    var done = false
-    while (!done) {
-      if (u8(at) != 0xff) bad()
-      val m = u8(at + 1)
-      if (m == 0xd8 || (m >= 0xd0 && m <= 0xd7)) at += 2
-      else if (m == 0xd9) {
-        if (progressive && progScans > 0) done = true // EOI ends the scans
-        else bad()
-      }
-      else {
-        val len = be16(at + 2)
-        if (len < 2) bad()
-        val seg = at + 4
-        m match {
-          case 0xc9 | 0xca => // SOF9 sequential / SOF10 progressive
-            progressive = m == 0xca
-            val precision = u8(seg)
-            if (precision != 8) bad()
-            height = be16(seg + 1)
-            width = be16(seg + 3)
-            val nc = u8(seg + 5)
-            if (width <= 0 || height <= 0 || nc <= 0 || nc > 4) bad()
-            if (nc == 2) bad()
-            if (width.toLong * height * nc > (1L << 26)) bad()
-            comps = Array.tabulate(nc) { i =>
-              val off = seg + 6 + i * 3
-              val hv = u8(off + 1)
-              val hi = hv >> 4
-              val vi = hv & 0x0f
-              if (hi < 1 || hi > 2 || vi < 1 || vi > 2) bad() // up to 4:2:0
-              AComp(u8(off), hi, vi, u8(off + 2))
-            }
-            if (nc == 1 && (comps(0).h != 1 || comps(0).v != 1)) bad()
-            if (progressive) {
-              // progressive scope: 1x1 sampling (gray / 4:4:4)
-              if (comps.exists(c => c.h != 1 || c.v != 1)) bad()
-              wB = (width + 7) / 8
-              hB = (height + 7) / 8
-              progCoef = Array.fill(nc)(new Array[Int](wB * hB * 64))
-            }
-          case 0xc0 | 0xc1 | 0xc2 | 0xc3 | 0xcb =>
-            bad() // Huffman SOFs / lossless arithmetic: not this decoder
-          case 0xdb => // DQT
-            var o = seg
-            while (o < seg + len - 2) {
-              val pq = u8(o) >> 4
-              val tq = u8(o) & 0x0f
-              if (tq > 3) bad()
-              for (k <- 0 until 64)
-                quant(tq)(k) =
-                  if (pq == 0) u8(o + 1 + k) else be16(o + 1 + 2 * k)
-              haveQuant(tq) = true
-              o += 1 + (if (pq == 0) 64 else 128)
-            }
-          case 0xcc => // DAC conditioning
-            var o = seg
-            while (o < seg + len - 2) {
-              val tc = u8(o) >> 4
-              val tb = u8(o) & 0x0f
-              if (tb > 3) bad()
-              val v = u8(o + 1)
-              if (tc == 0) {
-                dcL(tb) = v & 0x0f
-                dcU(tb) = v >> 4
-                if (dcU(tb) < dcL(tb) || dcU(tb) > 15) bad()
-              } else {
-                if (v < 1 || v > 63) bad()
-                acK(tb) = v
-              }
-              o += 2
-            }
-          case 0xdd =>
-            restartInterval = be16(seg)
-          case 0xda =>
-            if (comps == null) bad()
-            val ns = u8(seg)
-            val scanIdx = new Array[Int](ns)
-            for (i <- 0 until ns) {
-              val cid = u8(seg + 1 + i * 2)
-              val ci = comps.indexWhere(_.id == cid)
-              if (ci < 0) bad()
-              scanIdx(i) = ci
-              comps(ci).dcTab = u8(seg + 2 + i * 2) >> 4
-              comps(ci).acTab = u8(seg + 2 + i * 2) & 0x0f
-              if (comps(ci).dcTab > 3 || comps(ci).acTab > 3) bad()
-            }
-            val ss = u8(seg + 1 + ns * 2)
-            val se = u8(seg + 2 + ns * 2)
-            val ah = u8(seg + 3 + ns * 2) >> 4
-            val al = u8(seg + 3 + ns * 2) & 0x0f
-            if (!progressive) {
-              if (ns != comps.length) bad()
-              if (ss != 0 || se != 63 || ah != 0 || al != 0) bad()
-              done = true // entropy follows; sequential path takes over
-            } else {
-              // G.1.1 scan constraints: DC scans interleave all comps at
-              // [0,0]; AC scans are single-component bands.
-              if (ss == 0) { if (se != 0 || ns != comps.length) bad() }
-              else { if (ns != 1 || se < ss || se > 63) bad() }
-              if (ah != 0 && ah != al + 1) bad()
-              if (al > 13) bad()
-              val next = progressiveScan(p, at + 2 + len, comps, scanIdx,
-                progCoef, wB, hB, ss, se, ah, al, restartInterval,
-                dcL, dcU, acK)
-              progScans += 1
-              at = next - 2 - len // net: at += 2 + len lands on the marker
-            }
-          case _ => // APPn/COM: skip
-        }
-        at += 2 + len
-      }
-    }
-    if (comps == null) bad()
-    comps.foreach(c => if (!haveQuant(c.tq)) bad())
-
-    if (progressive) {
-      // all scans accumulated: dequantize, IDCT, assemble
+      val coef = new Array[Int](64)
       val nat = new Array[Int](64)
       val tmp = Array.ofDim[Double](8, 8)
-      var ci = 0
-      while (ci < comps.length) {
-        val c = comps(ci)
-        c.planeW = wB * 8
-        c.plane = new Array[Byte](wB * 8 * hB * 8)
-        val q = quant(c.tq)
-        val coefs = progCoef(ci)
-        var by = 0
-        while (by < hB) {
-          var bx = 0
-          while (bx < wB) {
-            val base = (by * wB + bx) * 64
-            var k = 0
-            while (k < 64) { nat(Zigzag(k)) = coefs(base + k) * q(k); k += 1 }
-            JpegCodec.idctTo(nat, c.plane, c.planeW, bx * 8, by * 8, tmp)
-            bx += 1
+      var mcu = 0
+      var rst = 0
+      var my = 0
+      while (my < f.mcusY) {
+        var mx = 0
+        while (mx < f.mcusX) {
+          if (f.restartInterval > 0 && mcu == f.restartInterval) {
+            // re-init coder + statistics (F.1.4.1)
+            dec = restart(f.p, dec, rst)
+            rst += 1
+            dcStats = dcBins()
+            acStats = acBins()
+            comps.foreach { c => c.pred = 0; c.dcContext = 0 }
+            mcu = 0
           }
-          by += 1
-        }
-        ci += 1
-      }
-      return assembleSimple(comps, width, height, 1, 1)
-    }
-
-    val hmax = comps.map(_.h).max
-    val vmax = comps.map(_.v).max
-    val mcusX = (width + 8 * hmax - 1) / (8 * hmax)
-    val mcusY = (height + 8 * vmax - 1) / (8 * vmax)
-    comps.foreach { c =>
-      c.planeW = mcusX * c.h * 8
-      c.plane = new Array[Byte](mcusX * c.h * 8 * mcusY * c.v * 8)
-    }
-
-    // statistics areas (per table id): DC 64 bins, AC 256 bins
-    var dcStats = Array.fill(4)(new Array[Int](64))
-    var acStats = Array.fill(4)(new Array[Int](256))
-    val fixedStats = Array(FixedBin) // context value: index 113, MPS 0
-    var dec = new QmDec(p, at)
-    def resetAll(): Unit = {
-      dcStats = Array.fill(4)(new Array[Int](64))
-      acStats = Array.fill(4)(new Array[Int](256))
-      comps.foreach { c => c.lastDc = 0; c.dcContext = 0 }
-    }
-
-    val coef = new Array[Int](64)
-    val nat = new Array[Int](64)
-    val tmp = Array.ofDim[Double](8, 8)
-    var mcu = 0
-    var rst = 0
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        if (restartInterval > 0 && mcu == restartInterval) {
-          // find RSTn, re-init coder + statistics (F.1.4.1). The byte
-          // feed may have already consumed the marker's 0xFF (renorm
-          // read-ahead) — resume the scan AT the marker in that case.
-          var i = if (dec.markerSeen && dec.markerAt >= 0) dec.markerAt else dec.bp
-          var found = -1
-          while (found < 0 && i + 1 < p.length) {
-            if ((p(i) & 0xff) == 0xff) {
-              val mk = p(i + 1) & 0xff
-              if (mk >= 0xd0 && mk <= 0xd7) found = i + 2
-              else if (mk == 0x00 || mk == 0xff) i += 1
-              else bad()
-            } else i += 1
-          }
-          if (found < 0) bad()
-          if (((p(found - 1) & 0xff) & 7) != (rst & 7)) bad()
-          rst += 1
-          resetAll()
-          dec = new QmDec(p, found)
-          mcu = 0
-        }
-        // interleaved MCU: per component, its h x v blocks, bv- then
-        // bh-order (A.2.3) — the same traversal the Huffman decoder uses
-        var ci = 0
-        while (ci < comps.length) {
-          val c = comps(ci)
-          var bv = 0
-          while (bv < c.v) {
-            var bh = 0
-            while (bh < c.h) {
-              val bx = mx * c.h + bh
-              val by = my * c.v + bv
-              // `coef` holds ZIGZAG-scan-order levels while decoding; the
-              // DQT table is zigzag by spec, so dequantize in place and
-              // remap to natural order for the IDCT.
-              java.util.Arrays.fill(coef, 0)
-              java.util.Arrays.fill(nat, 0)
-              decodeDcCoef(dec, dcStats(c.dcTab), c, dcL(c.dcTab), dcU(c.dcTab))
-              coef(0) = c.lastDc
-              decodeAcCoefs(dec, acStats(c.acTab), fixedStats, coef,
-                0, 1, 63, 0, acK(c.acTab))
-              val q = quant(c.tq)
-              var k = 0
-              while (k < 64) { nat(Zigzag(k)) = coef(k) * q(k); k += 1 }
-              JpegCodec.idctTo(nat, c.plane, c.planeW, bx * 8, by * 8, tmp)
-              bh += 1
+          // interleaved MCU: per component, its h x v blocks, bv- then
+          // bh-order (A.2.3) — the same traversal the Huffman decoder uses
+          var ci = 0
+          while (ci < comps.length) {
+            val c = comps(ci)
+            var bv = 0
+            while (bv < c.v) {
+              var bh = 0
+              while (bh < c.h) {
+                val bx = mx * c.h + bh
+                val by = my * c.v + bv
+                // `coef` holds ZIGZAG-scan-order levels while decoding; the
+                // DQT table is zigzag by spec, so dequantize in place and
+                // remap to natural order for the IDCT.
+                java.util.Arrays.fill(coef, 0)
+                java.util.Arrays.fill(nat, 0)
+                decodeDcCoef(dec, dcStats(c.dcTab), c, f.dcL(c.dcTab), f.dcU(c.dcTab))
+                coef(0) = c.pred
+                decodeAcCoefs(dec, acStats(c.acTab), fixedStats, coef,
+                  0, 1, 63, 0, f.acK(c.acTab))
+                val q = quants(ci)
+                var k = 0
+                while (k < 64) { nat(Zigzag(k)) = coef(k) * q(k); k += 1 }
+                JpegCodec.idctTo(nat, c.plane, c.planeW, bx * 8, by * 8, tmp)
+                bh += 1
+              }
+              bv += 1
             }
-            bv += 1
+            ci += 1
           }
-          ci += 1
+          mcu += 1
+          mx += 1
         }
-        mcu += 1
-        mx += 1
+        my += 1
       }
-      my += 1
+      JpegCodec.assemble(f)
     }
-    assembleSimple(comps, width, height, hmax, vmax)
-  }
 
   /** F.2.4.1 Decode_DC_DIFF + difference-category conditioning. */
-  private def decodeDcCoef(dec: QmDec, stats: Array[Int], c: AComp,
+  private def decodeDcCoef(dec: QmDec, stats: Array[Int], c: Comp,
                            condL: Int, condU: Int): Unit = {
     val s0 = c.dcContext
     if (dec.decode(stats, s0) == 0) {
@@ -577,7 +399,7 @@ object ArithJpeg {
       }
       v += 1
       if (sign == 1) v = -v
-      c.lastDc += v
+      c.pred += v
     }
   }
 
@@ -665,127 +487,53 @@ object ArithJpeg {
   }
 
   /** One progressive (SOF10) scan: decode entropy into the zigzag
-    * coefficient accumulators, return the offset of the next marker.
-    * Statistics are fresh per scan and per restart interval (F.1.4.1). */
-  private def progressiveScan(p: Array[Byte], dataAt: Int, comps: Array[AComp],
-                              scanIdx: Array[Int], progCoef: Array[Array[Int]],
-                              wB: Int, hB: Int, ss: Int, se: Int, ah: Int,
-                              al: Int, restartInterval: Int,
-                              dcL: Array[Int], dcU: Array[Int],
-                              acK: Array[Int]): Int = {
-    var dcStats = Array.fill(4)(new Array[Int](64))
-    var acStats = Array.fill(4)(new Array[Int](256))
+    * coefficient accumulators. Components are 1x1-sampled, so every scan
+    * walks the same block grid. Statistics are fresh per scan and per
+    * restart interval (F.1.4.1). */
+  private def progressiveScan(f: JpegFrame, coefs: Array[Array[Int]]): Unit = {
+    val ss = f.ss
+    val se = f.se
+    val ah = f.ah
+    val al = f.al
+    var dcStats = dcBins()
+    var acStats = acBins()
     val fixedStats = Array(FixedBin)
-    var dec = new QmDec(p, dataAt)
-    def resetScanState(): Unit = {
-      dcStats = Array.fill(4)(new Array[Int](64))
-      acStats = Array.fill(4)(new Array[Int](256))
-      comps.foreach { c => c.lastDc = 0; c.dcContext = 0 }
-    }
-    resetScanState()
+    var dec = new QmDec(f.p, f.dataAt)
+    f.comps.foreach { c => c.pred = 0; c.dcContext = 0 }
     var mcu = 0
     var rst = 0
-    var my = 0
-    while (my < hB) {
-      var mx = 0
-      while (mx < wB) {
-        if (restartInterval > 0 && mcu == restartInterval) {
-          var i = if (dec.markerSeen && dec.markerAt >= 0) dec.markerAt else dec.bp
-          var found = -1
-          while (found < 0 && i + 1 < p.length) {
-            if ((p(i) & 0xff) == 0xff) {
-              val mk = p(i + 1) & 0xff
-              if (mk >= 0xd0 && mk <= 0xd7) found = i + 2
-              else if (mk == 0x00 || mk == 0xff) i += 1
-              else bad()
-            } else i += 1
+    var b = 0
+    while (b < f.mcusX * f.mcusY) {
+      if (f.restartInterval > 0 && mcu == f.restartInterval) {
+        dec = restart(f.p, dec, rst)
+        rst += 1
+        dcStats = dcBins()
+        acStats = acBins()
+        f.comps.foreach { c => c.pred = 0; c.dcContext = 0 }
+        mcu = 0
+      }
+      val base = b * 64
+      if (ss == 0) {
+        // DC scan: one block per component
+        for (c <- f.scan) {
+          if (ah == 0) {
+            decodeDcCoef(dec, dcStats(c.dcTab), c, f.dcL(c.dcTab), f.dcU(c.dcTab))
+            coefs(c.index)(base) = c.pred << al
+          } else if (dec.decode(fixedStats, 0) == 1) {
+            coefs(c.index)(base) |= 1 << al // G.2.2: fixed-bin DC refinement
           }
-          if (found < 0) bad()
-          if (((p(found - 1) & 0xff) & 7) != (rst & 7)) bad()
-          rst += 1
-          resetScanState()
-          dec = new QmDec(p, found)
-          mcu = 0
         }
-        val base = (my * wB + mx) * 64
-        if (ss == 0) {
-          // DC scan: interleaved, one block per component
-          var i = 0
-          while (i < scanIdx.length) {
-            val ci = scanIdx(i)
-            val c = comps(ci)
-            if (ah == 0) {
-              decodeDcCoef(dec, dcStats(c.dcTab), c, dcL(c.dcTab), dcU(c.dcTab))
-              progCoef(ci)(base) = c.lastDc << al
-            } else if (dec.decode(fixedStats, 0) == 1) {
-              progCoef(ci)(base) |= 1 << al // G.2.2: fixed-bin DC refinement
-            }
-            i += 1
-          }
-        } else {
-          val ci = scanIdx(0)
-          val c = comps(ci)
-          if (ah == 0)
-            decodeAcCoefs(dec, acStats(c.acTab), fixedStats, progCoef(ci),
-              base, ss, se, al, acK(c.acTab))
-          else
-            acRefineBlock(dec, acStats(c.acTab), fixedStats, progCoef(ci),
-              base, ss, se, al)
-        }
-        mcu += 1
-        mx += 1
+      } else {
+        val c = f.scan(0)
+        if (ah == 0)
+          decodeAcCoefs(dec, acStats(c.acTab), fixedStats, coefs(c.index),
+            base, ss, se, al, f.acK(c.acTab))
+        else
+          acRefineBlock(dec, acStats(c.acTab), fixedStats, coefs(c.index),
+            base, ss, se, al)
       }
-      my += 1
-    }
-    // locate the next marker after the (possibly not fully consumed)
-    // entropy bytes: skip data, FF00 stuffing and FF fill
-    var i = if (dec.markerSeen && dec.markerAt >= 0) dec.markerAt else dec.bp
-    while (i + 1 < p.length) {
-      if ((p(i) & 0xff) == 0xff) {
-        val mk = p(i + 1) & 0xff
-        if (mk != 0x00 && mk != 0xff) return i
-      }
-      i += 1
-    }
-    bad()
-  }
-
-  /** Raster assembly: grayscale pass-through, or nearest-neighbor chroma
-    * upsample + YCbCr→RGB (identical math to the Huffman decoder's
-    * assemble, so cross-encoder pixel equality holds for 4:2:0 too). */
-  private def assembleSimple(comps: Array[AComp], width: Int, height: Int,
-                             hmax: Int, vmax: Int): Raster = {
-    if (comps.length == 1) {
-      val c = comps(0)
-      val out = new Array[Byte](width * height)
-      var y = 0
-      while (y < height) {
-        System.arraycopy(c.plane, y * c.planeW, out, y * width, width)
-        y += 1
-      }
-      Raster(width, height, 1, out)
-    } else {
-      val cy = comps(0); val cb = comps(1); val cr = comps(2)
-      val out = new Array[Byte](width * height * 3)
-      var y = 0
-      while (y < height) {
-        var x = 0
-        while (x < width) {
-          val yy = cy.plane((y * cy.v / vmax) * cy.planeW + x * cy.h / hmax) & 0xff
-          val pb = (cb.plane((y * cb.v / vmax) * cb.planeW + x * cb.h / hmax) & 0xff) - 128
-          val pr = (cr.plane((y * cr.v / vmax) * cr.planeW + x * cr.h / hmax) & 0xff) - 128
-          val r = math.round(yy + 1.402 * pr).toInt
-          val g = math.round(yy - 0.344136 * pb - 0.714136 * pr).toInt
-          val b = math.round(yy + 1.772 * pb).toInt
-          val d = (y * width + x) * 3
-          out(d) = (if (r < 0) 0 else if (r > 255) 255 else r).toByte
-          out(d + 1) = (if (g < 0) 0 else if (g > 255) 255 else g).toByte
-          out(d + 2) = (if (b < 0) 0 else if (b > 255) 255 else b).toByte
-          x += 1
-        }
-        y += 1
-      }
-      Raster(width, height, 3, out)
+      mcu += 1
+      b += 1
     }
   }
 
@@ -794,15 +542,15 @@ object ArithJpeg {
   // ------------------------------------------------------------------
 
   /** F.1.4.4.1 Encode_DC_DIFF. */
-  private def encodeDcCoef(enc: QmEnc, stats: Array[Int], c: AComp,
+  private def encodeDcCoef(enc: QmEnc, stats: Array[Int], c: Comp,
                            dcVal: Int, condL: Int, condU: Int): Unit = {
     val s0 = c.dcContext
-    var v = dcVal - c.lastDc
+    var v = dcVal - c.pred
     if (v == 0) {
       enc.code(stats, s0, 0)
       c.dcContext = 0
     } else {
-      c.lastDc = dcVal
+      c.pred = dcVal
       enc.code(stats, s0, 1)
       var st = 0
       var sign = 0
@@ -944,36 +692,28 @@ object ArithJpeg {
     require(wBlocks > 0 && hBlocks > 0)
     require(components == 1 || components == 3)
     require(quantTable.length == 64)
-    val bos = new java.io.ByteArrayOutputStream()
-    def w8(v: Int): Unit = bos.write(v & 0xff)
-    def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
-    def marker(m: Int): Unit = { w8(0xff); w8(m) }
-    marker(0xd8)
-    marker(0xdb); w16(2 + 1 + 64); w8(0x00)
-    for (k <- 0 until 64) w8(quantTable(k)) // zigzag order in DQT
-    marker(0xc9); w16(8 + 3 * components); w8(8)
-    w16(hBlocks * 8); w16(wBlocks * 8); w8(components)
-    for (id <- 1 to components) { w8(id); w8(0x11); w8(0) }
-    if (restartInterval > 0) { marker(0xdd); w16(4); w16(restartInterval) }
-    marker(0xda); w16(6 + 2 * components); w8(components)
-    for (id <- 1 to components) { w8(id); w8(0x00) }
-    w8(0); w8(63); w8(0)
+    val w = new JpegWriter
+    w.marker(0xd8)
+    w.dqt(quantTable) // zigzag order in DQT
+    w.sof(0xc9, 8, wBlocks * 8, hBlocks * 8, Seq.fill(components)(0x11))
+    w.dri(restartInterval)
+    w.sos(1 to components, 0, 63, 0, 0)
 
-    var dcStats = Array.fill(4)(new Array[Int](64))
-    var acStats = Array.fill(4)(new Array[Int](256))
+    var dcStats = dcBins()
+    var acStats = acBins()
     val fixedStats = Array(FixedBin)
-    val comps = Array.tabulate(components)(i => AComp(i + 1, 1, 1, 0))
-    var enc = new QmEnc(bos)
+    val comps = Array.tabulate(components)(i => new Comp(i, i + 1, 1, 1, 0))
+    var enc = new QmEnc(w)
     var mcu = 0
     var rst = 0
     for (by <- 0 until hBlocks; bx <- 0 until wBlocks) {
       if (restartInterval > 0 && mcu == restartInterval) {
         enc.flush()
-        marker(0xd0 + (rst & 7))
+        w.marker(0xd0 + (rst & 7))
         rst += 1
-        dcStats = Array.fill(4)(new Array[Int](64))
-        acStats = Array.fill(4)(new Array[Int](256))
-        comps.foreach { c => c.lastDc = 0; c.dcContext = 0 }
+        dcStats = dcBins()
+        acStats = acBins()
+        comps.foreach { c => c.pred = 0; c.dcContext = 0 }
         mcu = 0
       }
       for (ci <- 0 until components) {
@@ -989,8 +729,8 @@ object ArithJpeg {
       mcu += 1
     }
     enc.flush()
-    marker(0xd9)
-    bos.toByteArray
+    w.marker(0xd9)
+    w.toByteArray
   }
 
   /** 4:2:0 arithmetic (SOF9) fixture: Y sampled 2x2 blocks per MCU,
@@ -1002,27 +742,17 @@ object ArithJpeg {
                      yGray: (Int, Int) => Int, cbVal: (Int, Int) => Int,
                      crVal: (Int, Int) => Int): Array[Byte] = {
     require(wMcus > 0 && hMcus > 0)
-    val bos = new java.io.ByteArrayOutputStream()
-    def w8(v: Int): Unit = bos.write(v & 0xff)
-    def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
-    def marker(m: Int): Unit = { w8(0xff); w8(m) }
-    marker(0xd8)
-    marker(0xdb); w16(2 + 1 + 64); w8(0x00)
-    for (_ <- 0 until 64) w8(1)
-    marker(0xc9); w16(8 + 9); w8(8)
-    w16(hMcus * 16); w16(wMcus * 16); w8(3)
-    w8(1); w8(0x22); w8(0) // Y: 2x2
-    w8(2); w8(0x11); w8(0) // Cb
-    w8(3); w8(0x11); w8(0) // Cr
-    marker(0xda); w16(6 + 6); w8(3)
-    for (id <- 1 to 3) { w8(id); w8(0x00) }
-    w8(0); w8(63); w8(0)
+    val w = new JpegWriter
+    w.marker(0xd8)
+    w.dqt(Array.fill(64)(1))
+    w.sof(0xc9, 8, wMcus * 16, hMcus * 16, Seq(0x22, 0x11, 0x11)) // Y 2x2, Cb, Cr
+    w.sos(1 to 3, 0, 63, 0, 0)
 
-    val dcStats = Array.fill(4)(new Array[Int](64))
-    val acStats = Array.fill(4)(new Array[Int](256))
+    val dcStats = dcBins()
+    val acStats = acBins()
     val fixedStats = Array(FixedBin)
-    val comps = Array(AComp(1, 2, 2, 0), AComp(2, 1, 1, 0), AComp(3, 1, 1, 0))
-    val enc = new QmEnc(bos)
+    val comps = Array(new Comp(0, 1, 2, 2, 0), new Comp(1, 2, 1, 1, 0), new Comp(2, 3, 1, 1, 0))
+    val enc = new QmEnc(w)
     val zeroAc = new Array[Int](64)
     for (my <- 0 until hMcus; mx <- 0 until wMcus; ci <- 0 until 3;
          bv <- 0 until comps(ci).v; bh <- 0 until comps(ci).h) {
@@ -1035,8 +765,8 @@ object ArithJpeg {
       encodeAcCoefs(enc, acStats(0), fixedStats, zeroAc, 0, 1, 63, 0, 5)
     }
     enc.flush()
-    marker(0xd9)
-    bos.toByteArray
+    w.marker(0xd9)
+    w.toByteArray
   }
 
   /** The arithmetic (SOF9) twin of [[JpegCodec.encodeJpegGrayBlocks]]:
@@ -1082,16 +812,10 @@ object ArithJpeg {
     require(components == 1 || components == 3)
     require(quantTable.length == 64)
     require(script.nonEmpty)
-    val bos = new java.io.ByteArrayOutputStream()
-    def w8(v: Int): Unit = bos.write(v & 0xff)
-    def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
-    def marker(m: Int): Unit = { w8(0xff); w8(m) }
-    marker(0xd8)
-    marker(0xdb); w16(2 + 1 + 64); w8(0x00)
-    for (k <- 0 until 64) w8(quantTable(k))
-    marker(0xca); w16(8 + 3 * components); w8(8) // SOF10
-    w16(hBlocks * 8); w16(wBlocks * 8); w8(components)
-    for (id <- 1 to components) { w8(id); w8(0x11); w8(0) }
+    val w = new JpegWriter
+    w.marker(0xd8)
+    w.dqt(quantTable)
+    w.sof(0xca, 8, wBlocks * 8, hBlocks * 8, Seq.fill(components)(0x11)) // SOF10
 
     // zigzag-order coefficient storage per component/block
     val nBlocks = wBlocks * hBlocks
@@ -1106,17 +830,15 @@ object ArithJpeg {
       a
     }
 
-    val comps = Array.tabulate(components)(i => AComp(i + 1, 1, 1, 0))
+    val comps = Array.tabulate(components)(i => new Comp(i, i + 1, 1, 1, 0))
     for (scan <- script) {
       val scanComps = if (scan.comp < 0) (0 until components) else Seq(scan.comp)
-      marker(0xda); w16(6 + 2 * scanComps.length); w8(scanComps.length)
-      scanComps.foreach { ci => w8(ci + 1); w8(0x00) }
-      w8(scan.ss); w8(scan.se); w8((scan.ah << 4) | scan.al)
-      val dcStats = Array.fill(4)(new Array[Int](64))
-      val acStats = Array.fill(4)(new Array[Int](256))
+      w.sos(scanComps.map(_ + 1), scan.ss, scan.se, scan.ah, scan.al)
+      val dcStats = dcBins()
+      val acStats = acBins()
       val fixedStats = Array(FixedBin)
-      comps.foreach { c => c.lastDc = 0; c.dcContext = 0 }
-      val enc = new QmEnc(bos)
+      comps.foreach { c => c.pred = 0; c.dcContext = 0 }
+      val enc = new QmEnc(w)
       var b = 0
       while (b < nBlocks) {
         if (scan.ss == 0) {
@@ -1140,7 +862,7 @@ object ArithJpeg {
       }
       enc.flush()
     }
-    marker(0xd9)
-    bos.toByteArray
+    w.marker(0xd9)
+    w.toByteArray
   }
 }

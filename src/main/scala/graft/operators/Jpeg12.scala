@@ -18,144 +18,49 @@ package graft.operators
   * (fully interleaved single scan), Huffman only (SOF9/SOF10 arithmetic
   * live in [[ArithJpeg]]). Output is raw component samples — no YCbCr
   * transform, matching [[LosslessJpeg]]'s convention: 12-bit pipelines
-  * treat the component planes as data, not display pixels.
+  * treat the component planes as data, not display pixels. Headers and
+  * their guards are [[JpegFrame]]'s, shared with the other processes;
+  * [[RasterCodec.decode]] routes 12-bit SOF1 frames here, and [[decode]]
+  * returns None for a frame of any other process.
   *
   * Reference behavior: the reference pipeline ingests arbitrary binary
   * file content (`dlt_sources/m365/__init__.py:22-62`); this decoder is
   * part of making those payloads analyzable in-engine.
   */
 object Jpeg12 {
-  import JpegCodec.{Bad, bad, Huff, BitReader, extend, Zigzag, Cos, idct12To}
+  import JpegCodec.{BitReader, extend, Zigzag, idct12To}
+  import JpegFrame.bad
 
   /** Decoded 12-bit image: `samples` interleaved row-major, each in
     * [0, 4095]. */
   final case class Image12(width: Int, height: Int, components: Int,
                            samples: Array[Int])
 
-  def decode(p: Array[Byte]): Option[Image12] = {
-    if (p == null || p.length < 4 || (p(0) & 0xff) != 0xff ||
-      (p(1) & 0xff) != 0xd8) return None
-    try Some(run(p)) catch {
-      case _: Bad | _: ArrayIndexOutOfBoundsException |
-           _: NegativeArraySizeException => None
-    }
-  }
+  def decode(p: Array[Byte]): Option[Image12] =
+    JpegFrame.decode(p, JpegFrame.Huffman12)(decodeFrame)
 
-  private final case class C12(id: Int, tq: Int,
-                               var dcTab: Int = 0, var acTab: Int = 0,
-                               var pred: Int = 0)
-
-  private def run(p: Array[Byte]): Image12 = {
-    def u8(i: Int) = if (i < p.length) p(i) & 0xff else bad()
-    def be16(i: Int) = (u8(i) << 8) | u8(i + 1)
-
-    var width = 0
-    var height = 0
-    var comps: Array[C12] = null
-    val quant = Array.ofDim[Int](4, 64)
-    val quantSeen = new Array[Boolean](4)
-    val dcTabs = new Array[Huff](4)
-    val acTabs = new Array[Huff](4)
-    var restartInterval = 0
-
-    var at = 2
-    var scanAt = -1
-    while (scanAt < 0) {
-      if (u8(at) != 0xff) bad()
-      val m = u8(at + 1)
-      if (m == 0xd8 || (m >= 0xd0 && m <= 0xd7)) { at += 2 }
-      else if (m == 0xd9) bad() // EOI before the scan
-      else {
-        val len = be16(at + 2)
-        if (len < 2) bad()
-        val seg = at + 4
-        m match {
-          case 0xdb => // DQT — Pq=0 (8-bit) or Pq=1 (16-bit) elements
-            var o = seg
-            while (o < seg + len - 2) {
-              val pq = u8(o) >> 4
-              val tq = u8(o) & 0x0f
-              if (pq > 1 || tq > 3) bad()
-              val w = if (pq == 1) 2 else 1
-              for (k <- 0 until 64)
-                quant(tq)(k) = if (pq == 1) be16(o + 1 + 2 * k)
-                               else u8(o + 1 + k)
-              if (quant(tq).exists(_ <= 0)) bad()
-              quantSeen(tq) = true
-              o += 1 + 64 * w
-            }
-          case 0xc4 => // DHT
-            var o = seg
-            while (o < seg + len - 2) {
-              val tc = u8(o) >> 4
-              val th = u8(o) & 0x0f
-              if (tc > 1 || th > 3) bad()
-              val bits = new Array[Int](17)
-              var total = 0
-              for (l <- 1 to 16) { bits(l) = u8(o + l); total += bits(l) }
-              if (total > 256) bad()
-              val vals = new Array[Byte](total)
-              for (i <- 0 until total) vals(i) = p(o + 17 + i)
-              val h = new Huff(bits, vals)
-              if (tc == 0) dcTabs(th) = h else acTabs(th) = h
-              o += 17 + total
-            }
-          case 0xc1 => // SOF1 extended sequential
-            if (comps != null) bad()
-            if (u8(seg) != 12) bad() // this decoder is the 12-bit process
-            height = be16(seg + 1)
-            width = be16(seg + 3)
-            val n = u8(seg + 5)
-            if (width <= 0 || height <= 0 || (n != 1 && n != 3)) bad()
-            if (width.toLong * height * n > (1L << 24)) bad() // alloc guard
-            comps = Array.tabulate(n) { c =>
-              val o = seg + 6 + c * 3
-              if (u8(o + 1) != 0x11) bad() // 1x1 sampling only
-              val tq = u8(o + 2)
-              if (tq > 3) bad()
-              C12(u8(o), tq)
-            }
-          case 0xc0 | 0xc2 | 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca |
-               0xcb | 0xcd | 0xce | 0xcf =>
-            bad() // other processes belong to their own decoders
-          case 0xdd =>
-            restartInterval = be16(seg)
-          case 0xda =>
-            if (comps == null) bad()
-            val ns = u8(seg)
-            if (ns != comps.length) bad() // single interleaved scan
-            for (i <- 0 until ns) {
-              val cid = u8(seg + 1 + i * 2)
-              val c = comps.find(_.id == cid).getOrElse(bad())
-              val tt = u8(seg + 2 + i * 2)
-              c.dcTab = tt >> 4
-              c.acTab = tt & 15
-            }
-            scanAt = at + 2 + len
-          case _ => // APPn/COM: skip
-        }
-        if (scanAt < 0) at += 2 + len
-      }
-    }
-
+  private[operators] def decodeFrame(f: JpegFrame): Image12 = {
+    val comps = f.comps
     val nc = comps.length
-    for (c <- comps) {
-      if (!quantSeen(c.tq)) bad()
-      if (dcTabs(c.dcTab) == null || acTabs(c.acTab) == null) bad()
-    }
-    val wB = (width + 7) / 8
-    val hB = (height + 7) / 8
-    // per-component padded plane of 12-bit samples
+    val quants = comps.map(f.quantFor)
+    val dcTabs = comps.map(f.dcTable)
+    val acTabs = comps.map(f.acTable)
+    // 1x1 sampling: one block per component per MCU, padded planes of
+    // 12-bit samples
+    val wB = f.mcusX
+    val hB = f.mcusY
+    val width = f.width
+    val height = f.height
     val planeW = wB * 8
     val planes = Array.fill(nc)(new Array[Int](planeW * hB * 8))
 
-    val br = new BitReader(p, scanAt)
+    val br = new BitReader(f.p, f.dataAt)
     val coef = new Array[Int](64)
     val tmp = Array.ofDim[Double](8, 8)
     var mcu = 0
     val nMcus = wB * hB
     while (mcu < nMcus) {
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
+      if (f.restartInterval > 0 && mcu > 0 && mcu % f.restartInterval == 0) {
         if (!br.restart()) bad()
         comps.foreach(_.pred = 0)
       }
@@ -164,16 +69,16 @@ object Jpeg12 {
       var ci = 0
       while (ci < nc) {
         val c = comps(ci)
-        val q = quant(c.tq)
+        val q = quants(ci)
         java.util.Arrays.fill(coef, 0)
-        val t = br.decode(dcTabs(c.dcTab))
+        val t = br.decode(dcTabs(ci))
         if (t > 15) bad() // 12-bit DC categories stop at SSSS=15
         c.pred += extend(br.bits(t), t)
         coef(0) = c.pred * q(0)
         var k = 1
         var eob = false
         while (!eob && k < 64) {
-          val rs = br.decode(acTabs(c.acTab))
+          val rs = br.decode(acTabs(ci))
           val r = rs >> 4
           val s = rs & 15
           if (s == 0) {
@@ -227,58 +132,21 @@ object Jpeg12 {
                          restartInterval: Int = 0): Array[Byte] = {
     require(wBlocks > 0 && hBlocks > 0)
     require(components == 1 || components == 3)
-    val bos = new java.io.ByteArrayOutputStream()
-    def w8(v: Int): Unit = bos.write(v & 0xff)
-    def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
-    def marker(m: Int): Unit = { w8(0xff); w8(m) }
-    marker(0xd8)
-    if (pq16) {
-      marker(0xdb); w16(2 + 1 + 128); w8(0x10) // Pq=1 Tq=0
-      for (_ <- 0 until 64) w16(1)
-    } else {
-      marker(0xdb); w16(2 + 1 + 64); w8(0x00)
-      for (_ <- 0 until 64) w8(1)
-    }
-    val wPix = wBlocks * 8
-    val hPix = hBlocks * 8
-    marker(0xc1); w16(8 + 3 * components); w8(12); w16(hPix); w16(wPix)
-    w8(components)
-    for (id <- 1 to components) { w8(id); w8(0x11); w8(0) }
-    // DHT DC 0: 16 symbols (categories 0..15), all 5-bit codes
-    marker(0xc4); w16(2 + 1 + 16 + 16); w8(0x00)
-    for (l <- 1 to 16) w8(if (l == 5) 16 else 0)
-    for (s <- 0 until 16) w8(s)
-    // DHT AC 0: single symbol EOB, 1-bit code "0"
-    marker(0xc4); w16(2 + 1 + 16 + 1); w8(0x10)
-    for (l <- 1 to 16) w8(if (l == 1) 1 else 0)
-    w8(0x00)
-    if (restartInterval > 0) { marker(0xdd); w16(4); w16(restartInterval) }
-    marker(0xda); w16(6 + 2 * components); w8(components)
-    for (id <- 1 to components) { w8(id); w8(0x00) }
-    w8(0); w8(63); w8(0)
-    var acc = 0
-    var nbits = 0
-    def put(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1)
-        nbits += 1
-        if (nbits == 8) {
-          bos.write(acc)
-          if (acc == 0xff) bos.write(0x00)
-          acc = 0; nbits = 0
-        }
-        i -= 1
-      }
-    }
-    def flushBits(): Unit = while (nbits != 0) put(1, 1)
+    val w = new JpegWriter
+    w.marker(0xd8)
+    w.dqt(Array.fill(64)(1), pq16) // pq16: Pq=1, 16-bit entries
+    w.sof(0xc1, 12, wBlocks * 8, hBlocks * 8, Seq.fill(components)(0x11))
+    w.dht(0x00, 5, 0 until 16) // DC 0: categories 0..15, all 5-bit codes
+    w.dht(0x10, 1, Seq(0x00)) // AC 0: single symbol EOB, 1-bit code "0"
+    w.dri(restartInterval)
+    w.sos(1 to components, 0, 63, 0, 0)
     val pred = new Array[Int](3)
     var rst = 0
     var sinceRestart = 0
     for (by <- 0 until hBlocks; bx <- 0 until wBlocks) {
       if (restartInterval > 0 && sinceRestart == restartInterval) {
-        flushBits()
-        marker(0xd0 + rst)
+        w.flushBits()
+        w.marker(0xd0 + rst)
         rst = (rst + 1) % 8
         sinceRestart = 0
         java.util.Arrays.fill(pred, 0)
@@ -292,15 +160,15 @@ object Jpeg12 {
         var s = 0
         var a = math.abs(diff)
         while (a != 0) { s += 1; a >>= 1 }
-        put(s, 5) // DC category, canonical code == category
-        if (s > 0) put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-        put(0, 1) // EOB
+        w.put(s, 5) // DC category, canonical code == category
+        if (s > 0) w.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
+        w.put(0, 1) // EOB
       }
       sinceRestart += 1
     }
-    flushBits()
-    marker(0xd9)
-    bos.toByteArray
+    w.flushBits()
+    w.marker(0xd9)
+    w.toByteArray
   }
 
   /** General 12-bit fixture encoder: arbitrary per-block NATURAL-order
@@ -312,45 +180,20 @@ object Jpeg12 {
   def encode12GrayCoefBlocks(wBlocks: Int, hBlocks: Int,
                              coefs: (Int, Int) => Array[Int]): Array[Byte] = {
     require(wBlocks > 0 && hBlocks > 0)
-    val bos = new java.io.ByteArrayOutputStream()
-    def w8(v: Int): Unit = bos.write(v & 0xff)
-    def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
-    def marker(m: Int): Unit = { w8(0xff); w8(m) }
-    marker(0xd8)
-    marker(0xdb); w16(2 + 1 + 64); w8(0x00)
-    for (_ <- 0 until 64) w8(1)
-    marker(0xc1); w16(8 + 3); w8(12); w16(hBlocks * 8); w16(wBlocks * 8)
-    w8(1); w8(1); w8(0x11); w8(0)
-    // DC 0: categories 0..15 at 5 bits
-    marker(0xc4); w16(2 + 1 + 16 + 16); w8(0x00)
-    for (l <- 1 to 16) w8(if (l == 5) 16 else 0)
-    for (s <- 0 until 16) w8(s)
+    val w = new JpegWriter
+    w.marker(0xd8)
+    w.dqt(Array.fill(64)(1))
+    w.sof(0xc1, 12, wBlocks * 8, hBlocks * 8, Seq(0x11))
+    w.dht(0x00, 5, 0 until 16) // DC 0: categories 0..15 at 5 bits
     // AC 0: EOB(0x00), ZRL(0xF0), and (r<<4|s) for r 0..15, s 1..14 —
     // 226 symbols, all 8-bit canonical codes (max code 225, the
     // all-ones codeword stays unassigned as T.81 requires)
     val acSyms = (0x00 +: 0xf0 +: (for {
       r <- 0 to 15; s <- 1 to 14
     } yield (r << 4) | s)).distinct.sorted
-    marker(0xc4); w16(2 + 1 + 16 + acSyms.length); w8(0x10)
-    for (l <- 1 to 16) w8(if (l == 8) acSyms.length else 0)
-    for (s <- acSyms) w8(s)
+    w.dht(0x10, 8, acSyms)
     val acCode = acSyms.zipWithIndex.toMap
-    marker(0xda); w16(8); w8(1); w8(1); w8(0x00); w8(0); w8(63); w8(0)
-    var acc = 0
-    var nbits = 0
-    def put(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1)
-        nbits += 1
-        if (nbits == 8) {
-          bos.write(acc)
-          if (acc == 0xff) bos.write(0x00)
-          acc = 0; nbits = 0
-        }
-        i -= 1
-      }
-    }
+    w.sos(Seq(1), 0, 63, 0, 0)
     def cat(v: Int): Int = {
       var s = 0
       var a = math.abs(v)
@@ -366,8 +209,8 @@ object Jpeg12 {
       pred = c(0)
       val s0 = cat(diff)
       require(s0 <= 15, "DC diff exceeds 12-bit category range")
-      put(s0, 5)
-      if (s0 > 0) put(mag(diff, s0), s0)
+      w.put(s0, 5)
+      if (s0 > 0) w.put(mag(diff, s0), s0)
       // AC in zigzag order with run-lengths
       var k = 1
       var run = 0
@@ -375,19 +218,19 @@ object Jpeg12 {
         val v = c(Zigzag(k))
         if (v == 0) run += 1
         else {
-          while (run >= 16) { put(acCode(0xf0), 8); run -= 16 }
+          while (run >= 16) { w.put(acCode(0xf0), 8); run -= 16 }
           val s = cat(v)
           require(s <= 14, "AC magnitude exceeds 12-bit size range")
-          put(acCode((run << 4) | s), 8)
-          put(mag(v, s), s)
+          w.put(acCode((run << 4) | s), 8)
+          w.put(mag(v, s), s)
           run = 0
         }
         k += 1
       }
-      if (run > 0) put(acCode(0x00), 8) // EOB
+      if (run > 0) w.put(acCode(0x00), 8) // EOB
     }
-    while (nbits != 0) put(1, 1)
-    marker(0xd9)
-    bos.toByteArray
+    w.flushBits()
+    w.marker(0xd9)
+    w.toByteArray
   }
 }

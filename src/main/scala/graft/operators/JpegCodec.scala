@@ -1,14 +1,16 @@
 package graft.operators
 
-/** Dependency-free JPEG (JFIF) decoder: marker parse, canonical Huffman
-  * entropy decode, dequantize + dezigzag, separable floating IDCT,
-  * nearest-neighbor chroma upsampling, YCbCr→RGB. Covers baseline and
-  * extended sequential DCT (SOF0/SOF1) plus progressive DCT (SOF2 —
-  * spectral selection, successive approximation, DC/AC first and
+/** Dependency-free JPEG (JFIF) decoder, the Huffman 8-bit back-end:
+  * canonical Huffman entropy decode, dequantize + dezigzag, separable
+  * floating IDCT, nearest-neighbor chroma upsampling, YCbCr→RGB. Covers
+  * baseline and extended sequential DCT (SOF0/SOF1) plus progressive DCT
+  * (SOF2 — spectral selection, successive approximation, DC/AC first and
   * refinement scans with EOB runs, per G.1.2 and the libjpeg
   * correction-bit algorithm), 8-bit, 1 or 3 components, sampling factors
-  * ≤ 2, restart markers, byte stuffing. Arithmetic coding, 12-bit,
-  * lossless/differential modes, and CMYK return None.
+  * ≤ 2, restart markers, byte stuffing. Header parsing and its guards are
+  * [[JpegFrame]]'s, shared with the other processes' back-ends; a frame of
+  * another process (arithmetic, 12-bit, lossless, hierarchical) or with
+  * four components returns None here.
   *
   * Same role as the BMP/PNG paths in [[RasterCodec]]: the reference
   * pipeline ingests arbitrary binary file content
@@ -24,9 +26,7 @@ package graft.operators
   */
 object JpegCodec {
   import RasterCodec.Raster
-
-  private[operators] final class Bad extends RuntimeException(null, null, false, false)
-  private[operators] def bad(): Nothing = throw new Bad
+  import JpegFrame.{bad, Comp}
 
   private[operators] val Zigzag: Array[Int] = Array(
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -74,16 +74,11 @@ object JpegCodec {
       * found instead means the stream is corrupt here. */
     def restart(): Boolean = {
       reset()
-      var i = pos
-      while (i + 1 < p.length) {
-        if ((p(i) & 0xff) == 0xff) {
-          val m = p(i + 1) & 0xff
-          if (m >= 0xd0 && m <= 0xd7) { pos = i + 2; sawMarker = -1; return true }
-          if (m != 0x00 && m != 0xff) return false
-          i += (if (m == 0x00) 2 else 1)
-        } else i += 1
-      }
-      false
+      val i = JpegFrame.nextMarker(p, pos)
+      if (i < 0 || !JpegFrame.isRst(p(i + 1) & 0xff)) return false
+      pos = i + 2
+      sawMarker = -1
+      true
     }
 
     private def fill(): Unit = {
@@ -140,284 +135,102 @@ object JpegCodec {
   private[operators] def extend(v: Int, s: Int): Int =
     if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
 
-  private final case class Comp(id: Int, h: Int, v: Int, tq: Int,
-                                var dcTab: Int = 0, var acTab: Int = 0,
-                                var pred: Int = 0, var plane: Array[Byte] = null,
-                                var planeW: Int = 0, var planeH: Int = 0)
+  def decodeJpeg(p: Array[Byte]): Option[Raster] =
+    JpegFrame.decode(p, JpegFrame.Huffman8)(decodeFrame)
 
-  def decodeJpeg(p: Array[Byte]): Option[Raster] = {
-    if (p == null || p.length < 4 || (p(0) & 0xff) != 0xff ||
-      (p(1) & 0xff) != 0xd8) return None
-    try Some(run(p)) catch {
-      case _: Bad | _: ArrayIndexOutOfBoundsException |
-           _: NegativeArraySizeException => None
-    }
-  }
-
-  private def run(p: Array[Byte]): Raster = {
-    def u8(i: Int) = if (i < p.length) p(i) & 0xff else bad()
-    def be16(i: Int) = (u8(i) << 8) | u8(i + 1)
-
-    val quant = Array.ofDim[Int](4, 64)
-    val quantSeen = new Array[Boolean](4)
-    val dcTabs = new Array[Huff](4)
-    val acTabs = new Array[Huff](4)
-    var comps: Array[Comp] = null
-    var width = 0
-    var height = 0
-    var restartInterval = 0
-    var progressive = false
-    // progressive state: per-comp coefficient buffers in ZIGZAG order,
-    // one 64-slot run per block on the MCU-padded grid, filled across scans
-    var coefs: Array[Array[Int]] = null
-    var padW: Array[Int] = null
-    var padH: Array[Int] = null
-    var mcusX = 0
-    var mcusY = 0
-    var hmax = 0
-    var vmax = 0
-    var scansSeen = 0
-    var i = 2
-    var scanAt = -1
-
-    def setupGeometry(): Unit = {
-      hmax = comps.map(_.h).max
-      vmax = comps.map(_.v).max
-      mcusX = (width + 8 * hmax - 1) / (8 * hmax)
-      mcusY = (height + 8 * vmax - 1) / (8 * vmax)
-      for (c <- comps) {
-        c.planeW = mcusX * c.h * 8
-        c.planeH = mcusY * c.v * 8
-        if (c.planeW.toLong * c.planeH > Int.MaxValue) bad()
-      }
-    }
-
-    while (scanAt < 0 && !(progressive && scansSeen > 0 && u8(i) == 0xff &&
-        u8(i + 1) == 0xd9)) {
-      if (u8(i) != 0xff) bad()
-      var m = u8(i + 1)
-      while (m == 0xff) { i += 1; m = u8(i + 1) } // legal fill bytes
-      if (m == 0xd8 || (m >= 0xd0 && m <= 0xd7) || m == 0x01) { i += 2 }
-      else if (m == 0xd9) bad() // EOI before any (baseline) scan
-      else {
-        val len = be16(i + 2)
-        if (len < 2 || i + 2 + len > p.length) bad()
-        val seg = i + 4
-        m match {
-          case 0xdb => // DQT — possibly several tables in one segment
-            var q = seg
-            while (q < i + 2 + len) {
-              val pq = u8(q) >> 4
-              val tq = u8(q) & 15
-              if (tq > 3 || pq > 1) bad()
-              var k = 0
-              q += 1
-              while (k < 64) {
-                quant(tq)(k) = if (pq == 1) { val v = be16(q); q += 2; v }
-                else { val v = u8(q); q += 1; v }
-                if (quant(tq)(k) <= 0) bad()
-                k += 1
-              }
-              quantSeen(tq) = true
-            }
-          case 0xc4 => // DHT — possibly several tables
-            var q = seg
-            while (q < i + 2 + len) {
-              val tc = u8(q) >> 4
-              val th = u8(q) & 15
-              if (tc > 1 || th > 3) bad()
-              val bits = new Array[Int](17)
-              var total = 0
-              for (l <- 1 to 16) { bits(l) = u8(q + l); total += bits(l) }
-              if (total > 256 || q + 17 + total > i + 2 + len) bad()
-              val vals = new Array[Byte](total)
-              System.arraycopy(p, q + 17, vals, 0, total)
-              val h = new Huff(bits, vals)
-              if (tc == 0) dcTabs(th) = h else acTabs(th) = h
-              q += 17 + total
-            }
-          case 0xc0 | 0xc1 | 0xc2 => // SOF0/1 baseline+extended, SOF2 progressive
-            if (comps != null) bad() // one frame only
-            progressive = m == 0xc2
-            if (u8(seg) != 8) bad() // 8-bit precision only
-            height = be16(seg + 1)
-            width = be16(seg + 3)
-            val n = u8(seg + 5)
-            if (width <= 0 || height <= 0 || width > (1 << 20) ||
-              height > (1 << 20) || (n != 1 && n != 3)) bad()
-            comps = Array.tabulate(n) { c =>
-              val o = seg + 6 + c * 3
-              val comp = Comp(u8(o), u8(o + 1) >> 4, u8(o + 1) & 15, u8(o + 2))
-              if (comp.h < 1 || comp.h > 2 || comp.v < 1 || comp.v > 2 ||
-                comp.tq > 3) bad()
-              comp
-            }
-            if (progressive) {
-              setupGeometry()
-              padW = comps.map(c => mcusX * c.h)
-              padH = comps.map(c => mcusY * c.v)
-              coefs = comps.indices.toArray.map { ci =>
-                val blocks = padW(ci).toLong * padH(ci)
-                if (blocks * 64 > Int.MaxValue / 2) bad()
-                new Array[Int](blocks.toInt * 64)
-              }
-            }
-          case 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca | 0xcb |
-               0xcd | 0xce | 0xcf =>
-            bad() // lossless / arithmetic / differential: unsupported
-          case 0xdd => // DRI
-            restartInterval = be16(seg)
-          case 0xda => // SOS
-            if (comps == null) bad()
-            val ns = u8(seg)
-            if (ns < 1 || ns > comps.length) bad()
-            val scanComps = Array.tabulate(ns) { c =>
-              val cs = u8(seg + 1 + c * 2)
-              val tt = u8(seg + 2 + c * 2)
-              val comp = comps.find(_.id == cs).getOrElse(bad())
-              comp.dcTab = tt >> 4
-              comp.acTab = tt & 15
-              comp
-            }
-            val ss = u8(seg + 1 + ns * 2)
-            val se = u8(seg + 2 + ns * 2)
-            val ahal = u8(seg + 3 + ns * 2)
-            if (progressive) {
-              val endAt = progressiveScan(p, i + 2 + len, scanComps, comps,
-                coefs, padW, padH, mcusX, mcusY, dcTabs, acTabs,
-                restartInterval, width, height, hmax, vmax,
-                ss, se, ahal >> 4, ahal & 15)
-              scansSeen += 1
-              i = endAt
-            } else {
-              if (ns != comps.length) bad()
-              scanAt = i + 2 + len
-            }
-          case _ => // APPn / COM / others: skip
-        }
-        if (scanAt < 0 && m != 0xda) i += 2 + len
-        else if (scanAt < 0 && m == 0xda && !progressive) ()
-      }
-    }
-
-    if (progressive) {
-      // all scans consumed: dequantize + IDCT every (padded-grid) block
-      for (c <- comps) {
-        if (!quantSeen(c.tq)) bad()
-        c.plane = new Array[Byte](c.planeW * c.planeH)
-      }
-      val nat = new Array[Int](64)
+  private[operators] def decodeFrame(f: JpegFrame): Raster =
+    if (f.progressive) {
+      // coefficients in ZIGZAG order, one 64-slot run per block of the
+      // MCU-padded grid, filled across the scans
+      val coefs = f.comps.map(c => new Array[Int](c.planeW * c.planeH))
+      do progressiveScan(f, coefs) while (f.nextScan())
+      render(f, coefs)
+    } else {
+      val comps = f.comps
+      val quants = comps.map(f.quantFor)
+      val dcTabs = comps.map(f.dcTable)
+      val acTabs = comps.map(f.acTable)
+      comps.foreach(c => c.plane = new Array[Byte](c.planeW * c.planeH))
+      val br = new BitReader(f.p, f.dataAt)
+      val coef = new Array[Int](64)
       val tmp = Array.ofDim[Double](8, 8)
-      for (ci <- comps.indices) {
-        val c = comps(ci)
-        val q = quant(c.tq)
-        val raw = coefs(ci)
-        var by = 0
-        while (by < padH(ci)) {
-          var bx = 0
-          while (bx < padW(ci)) {
-            val base = (by * padW(ci) + bx) * 64
-            var k = 0
-            while (k < 64) { nat(Zigzag(k)) = raw(base + k) * q(k); k += 1 }
-            idctTo(nat, c.plane, c.planeW, bx * 8, by * 8, tmp)
-            bx += 1
-          }
-          by += 1
+      var mcu = 0
+      val nMcus = f.mcusX * f.mcusY
+      while (mcu < nMcus) {
+        if (f.restartInterval > 0 && mcu > 0 && mcu % f.restartInterval == 0) {
+          if (!br.restart()) bad()
+          comps.foreach(_.pred = 0)
         }
-      }
-      return assemble(comps, width, height, hmax, vmax)
-    }
-
-    setupGeometry()
-    for (c <- comps) {
-      if (!quantSeen(c.tq)) bad()
-      c.plane = new Array[Byte](c.planeW * c.planeH)
-    }
-
-    val br = new BitReader(p, scanAt)
-    val coef = new Array[Int](64)
-    val tmp = Array.ofDim[Double](8, 8)
-    var mcu = 0
-    val nMcus = mcusX * mcusY
-    while (mcu < nMcus) {
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        if (!br.restart()) bad()
-        comps.foreach(_.pred = 0)
-      }
-      val mx = mcu % mcusX
-      val my = mcu / mcusX
-      for (c <- comps; bv <- 0 until c.v; bh <- 0 until c.h) {
-        val dc = dcTabs(c.dcTab)
-        val ac = acTabs(c.acTab)
-        if (dc == null || ac == null) bad()
-        java.util.Arrays.fill(coef, 0)
-        val q = quant(c.tq)
-        val t = br.decode(dc)
-        if (t > 11) bad()
-        c.pred += extend(br.bits(t), t)
-        coef(0) = c.pred * q(0)
-        var k = 1
-        var eob = false
-        while (!eob && k < 64) {
-          val rs = br.decode(ac)
-          val r = rs >> 4
-          val s = rs & 15
-          if (s == 0) {
-            if (r == 15) k += 16 else eob = true
-          } else {
-            k += r
-            if (k > 63) bad()
-            coef(Zigzag(k)) = extend(br.bits(s), s) * q(k)
-            k += 1
+        val mx = mcu % f.mcusX
+        val my = mcu / f.mcusX
+        for (c <- comps; bv <- 0 until c.v; bh <- 0 until c.h) {
+          val ac = acTabs(c.index)
+          val q = quants(c.index)
+          java.util.Arrays.fill(coef, 0)
+          val t = br.decode(dcTabs(c.index))
+          if (t > 11) bad()
+          c.pred += extend(br.bits(t), t)
+          coef(0) = c.pred * q(0)
+          var k = 1
+          var eob = false
+          while (!eob && k < 64) {
+            val rs = br.decode(ac)
+            val r = rs >> 4
+            val s = rs & 15
+            if (s == 0) {
+              if (r == 15) k += 16 else eob = true
+            } else {
+              k += r
+              if (k > 63) bad()
+              coef(Zigzag(k)) = extend(br.bits(s), s) * q(k)
+              k += 1
+            }
           }
+          // NOTE on truncation: a severely truncated scan fails here via an
+          // invalid Huffman code (-> None); a scan cut within the last few
+          // MCUs decodes its tail from zero-fill, matching libjpeg's
+          // recover-don't-crash convention (the bit reader legitimately
+          // reads ahead into the trailing marker, so a strict
+          // saw-marker-early check would reject valid streams).
+          idctTo(coef, c.plane, c.planeW,
+            (mx * c.h + bh) * 8, (my * c.v + bv) * 8, tmp)
         }
-        // NOTE on truncation: a severely truncated scan fails here via an
-        // invalid Huffman code (-> None); a scan cut within the last few
-        // MCUs decodes its tail from zero-fill, matching libjpeg's
-        // recover-don't-crash convention (the bit reader legitimately
-        // reads ahead into the trailing marker, so a strict
-        // saw-marker-early check would reject valid streams).
-        idctTo(coef, c.plane, c.planeW,
-          (mx * c.h + bh) * 8, (my * c.v + bv) * 8, tmp)
+        mcu += 1
       }
-      mcu += 1
+      assemble(f)
     }
-    assemble(comps, width, height, hmax, vmax)
-  }
 
   /** One progressive (SOF2) scan: spectral selection [ss, se] at
     * successive-approximation (ah, al), accumulating into the per-comp
     * zigzag-order coefficient buffers. DC scans may be interleaved (all
     * components, MCU order) or single-component; AC scans are single-
     * component over the real block grid per G.1.2. Refinement follows the
-    * libjpeg correction-bit algorithm. Returns the offset of the next
-    * marker. */
-  private def progressiveScan(p: Array[Byte], dataAt: Int,
-      scanComps: Array[Comp], comps: Array[Comp],
-      coefs: Array[Array[Int]], padW: Array[Int], padH: Array[Int],
-      mcusX: Int, mcusY: Int, dcTabs: Array[Huff], acTabs: Array[Huff],
-      restartInterval: Int, width: Int, height: Int, hmax: Int, vmax: Int,
-      ss: Int, se: Int, ah: Int, al: Int): Int = {
-    if (ss < 0 || se > 63 || ss > se || al > 13 || ah > 14) bad()
-    val br = new BitReader(p, dataAt)
+    * libjpeg correction-bit algorithm. */
+  private def progressiveScan(f: JpegFrame, coefs: Array[Array[Int]]): Unit = {
+    val ss = f.ss
+    val se = f.se
+    val ah = f.ah
+    val al = f.al
+    val br = new BitReader(f.p, f.dataAt)
     var eobrun = 0
-    scanComps.foreach(_.pred = 0)
+    f.scan.foreach(_.pred = 0)
 
-    def ciOf(c: Comp): Int = comps.indexWhere(_ eq c)
-    def blockBase(ci: Int, bx: Int, by: Int): Int = (by * padW(ci) + bx) * 64
+    def blockBase(c: Comp, bx: Int, by: Int): Int = (by * (c.planeW / 8) + bx) * 64
+    /** Blocks across and down the component's real (unpadded) grid. */
+    def realBlocks(c: Comp): (Int, Int) =
+      (((f.width * c.h + f.hmax - 1) / f.hmax + 7) / 8,
+        ((f.height * c.v + f.vmax - 1) / f.vmax + 7) / 8)
 
-    def decodeDc(c: Comp, ci: Int, bx: Int, by: Int): Unit = {
-      if (bx >= padW(ci) || by >= padH(ci)) bad()
-      val at = blockBase(ci, bx, by)
+    def decodeDc(c: Comp, bx: Int, by: Int): Unit = {
+      if (bx >= c.planeW / 8 || by >= c.planeH / 8) bad()
+      val at = blockBase(c, bx, by)
       if (ah == 0) {
-        val dc = dcTabs(c.dcTab)
-        if (dc == null) bad()
-        val t = br.decode(dc)
+        val t = br.decode(f.dcTable(c))
         if (t > 11) bad()
         c.pred += extend(br.bits(t), t)
-        coefs(ci)(at) = c.pred << al
+        coefs(c.index)(at) = c.pred << al
       } else {
-        if (br.bit() == 1) coefs(ci)(at) |= (1 << al) // libjpeg OR semantics
+        if (br.bit() == 1) coefs(c.index)(at) |= (1 << al) // libjpeg OR semantics
       }
     }
 
@@ -499,64 +312,69 @@ object JpegCodec {
     }
 
     def maybeRestart(unit: Int): Unit =
-      if (restartInterval > 0 && unit > 0 && unit % restartInterval == 0) {
+      if (f.restartInterval > 0 && unit > 0 && unit % f.restartInterval == 0) {
         if (!br.restart()) bad()
-        scanComps.foreach(_.pred = 0)
+        f.scan.foreach(_.pred = 0)
         eobrun = 0
       }
 
     if (ss == 0) {
-      if (se != 0) bad() // DC scan carries only coefficient 0
-      if (scanComps.length == comps.length && comps.length > 1) {
+      if (f.scan.length == f.comps.length && f.comps.length > 1) {
         var mcu = 0
-        val nMcus = mcusX * mcusY
+        val nMcus = f.mcusX * f.mcusY
         while (mcu < nMcus) {
           maybeRestart(mcu)
-          val mx = mcu % mcusX
-          val my = mcu / mcusX
-          for (c <- comps; bv <- 0 until c.v; bh <- 0 until c.h)
-            decodeDc(c, ciOf(c), mx * c.h + bh, my * c.v + bv)
+          val mx = mcu % f.mcusX
+          val my = mcu / f.mcusX
+          for (c <- f.comps; bv <- 0 until c.v; bh <- 0 until c.h)
+            decodeDc(c, mx * c.h + bh, my * c.v + bv)
           mcu += 1
         }
       } else {
-        for (c <- scanComps) {
-          val ci = ciOf(c)
-          val bw = ((width * c.h + hmax - 1) / hmax + 7) / 8
-          val bh = ((height * c.v + vmax - 1) / vmax + 7) / 8
+        for (c <- f.scan) {
+          val (bw, bh) = realBlocks(c)
           var blk = 0
           while (blk < bw * bh) {
             maybeRestart(blk)
-            decodeDc(c, ci, blk % bw, blk / bw)
+            decodeDc(c, blk % bw, blk / bw)
             blk += 1
           }
         }
       }
     } else {
-      if (scanComps.length != 1) bad() // AC scans are single-component
-      val c = scanComps(0)
-      val ci = ciOf(c)
-      val ac = acTabs(c.acTab)
-      if (ac == null) bad()
-      val bw = ((width * c.h + hmax - 1) / hmax + 7) / 8
-      val bh = ((height * c.v + vmax - 1) / vmax + 7) / 8
+      val c = f.scan(0)
+      val ac = f.acTable(c)
+      val (bw, bh) = realBlocks(c)
       var blk = 0
       while (blk < bw * bh) {
         maybeRestart(blk)
-        val base = blockBase(ci, blk % bw, blk / bw)
-        if (ah == 0) acFirst(ac, coefs(ci), base)
-        else acRefine(ac, coefs(ci), base)
+        val base = blockBase(c, blk % bw, blk / bw)
+        if (ah == 0) acFirst(ac, coefs(c.index), base)
+        else acRefine(ac, coefs(c.index), base)
         blk += 1
       }
     }
+  }
 
-    // skip to the next marker (tolerating unconsumed padding bits)
-    var i = br.pos
-    while (i + 1 < p.length && !((p(i) & 0xff) == 0xff && {
-      val m = p(i + 1) & 0xff
-      m != 0 && !(m >= 0xd0 && m <= 0xd7)
-    })) i += 1
-    if (i + 1 >= p.length) bad()
-    i
+  /** Dequantize and IDCT every block of the padded grids of a progressive
+    * frame's accumulated zigzag-order coefficients, then assemble. */
+  private[operators] def render(f: JpegFrame, coefs: Array[Array[Int]]): Raster = {
+    val nat = new Array[Int](64)
+    val tmp = Array.ofDim[Double](8, 8)
+    for (c <- f.comps) {
+      val q = f.quantFor(c)
+      val raw = coefs(c.index)
+      val bw = c.planeW / 8
+      c.plane = new Array[Byte](c.planeW * c.planeH)
+      var b = 0
+      while (b < raw.length / 64) {
+        var k = 0
+        while (k < 64) { nat(Zigzag(k)) = raw(b * 64 + k) * q(k); k += 1 }
+        idctTo(nat, c.plane, c.planeW, (b % bw) * 8, (b / bw) * 8, tmp)
+        b += 1
+      }
+    }
+    assemble(f)
   }
 
   /** Separable IDCT of one natural-order coefficient block into a plane
@@ -627,8 +445,12 @@ object JpegCodec {
   /** Crop component planes to the image and convert to the output raster:
     * grayscale pass-through for one component, nearest-neighbor chroma
     * upsample + YCbCr→RGB for three. */
-  private def assemble(comps: Array[Comp], width: Int, height: Int,
-                       hmax: Int, vmax: Int): Raster = {
+  private[operators] def assemble(f: JpegFrame): Raster = {
+    val comps = f.comps
+    val width = f.width
+    val height = f.height
+    val hmax = f.hmax
+    val vmax = f.vmax
     if (comps.length == 1) {
       val c = comps(0)
       val out = new Array[Byte](width * height)
@@ -677,46 +499,15 @@ object JpegCodec {
                            components: Int = 3): Array[Byte] = {
     require(wBlocks > 0 && hBlocks > 0)
     require(components == 1 || components == 3)
-    val bos = new java.io.ByteArrayOutputStream()
-    def w8(v: Int): Unit = bos.write(v & 0xff)
-    def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
-    def marker(m: Int): Unit = { w8(0xff); w8(m) }
-    marker(0xd8) // SOI
-    marker(0xdb); w16(2 + 1 + 64); w8(0x00) // DQT: pq=0 tq=0
-    for (_ <- 0 until 64) w8(1)
-    val wPix = wBlocks * 8
-    val hPix = hBlocks * 8
-    marker(0xc0); w16(8 + 3 * components); w8(8); w16(hPix); w16(wPix)
-    w8(components)
-    for (id <- 1 to components) { w8(id); w8(0x11); w8(0) } // 4:4:4, quant 0
-    // DHT DC 0: 12 symbols (categories 0..11), all 4-bit codes
-    marker(0xc4); w16(2 + 1 + 16 + 12); w8(0x00)
-    for (l <- 1 to 16) w8(if (l == 4) 12 else 0)
-    for (s <- 0 until 12) w8(s)
-    // DHT AC 0: single symbol EOB, 1-bit code "0"
-    marker(0xc4); w16(2 + 1 + 16 + 1); w8(0x10)
-    for (l <- 1 to 16) w8(if (l == 1) 1 else 0)
-    w8(0x00)
-    marker(0xda); w16(6 + 2 * components); w8(components)
-    for (id <- 1 to components) { w8(id); w8(0x00) }
-    w8(0); w8(63); w8(0) // ss/se/ah-al
+    val w = new JpegWriter
+    w.marker(0xd8) // SOI
+    w.dqt(Array.fill(64)(1))
+    w.sof(0xc0, 8, wBlocks * 8, hBlocks * 8, Seq.fill(components)(0x11)) // 4:4:4
+    w.dht(0x00, 4, 0 until 12) // DC 0: categories 0..11, all 4-bit codes
+    w.dht(0x10, 1, Seq(0x00)) // AC 0: single symbol EOB, 1-bit code "0"
+    w.sos(1 to components, 0, 63, 0, 0)
     // entropy: DC category codes are canonical 4-bit (code == category),
     // AC EOB is the single bit 0
-    var acc = 0
-    var nbits = 0
-    def put(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1)
-        nbits += 1
-        if (nbits == 8) {
-          bos.write(acc)
-          if (acc == 0xff) bos.write(0x00) // byte stuffing
-          acc = 0; nbits = 0
-        }
-        i -= 1
-      }
-    }
     val pred = new Array[Int](3)
     for (by <- 0 until hBlocks; bx <- 0 until wBlocks; c <- 0 until components) {
       val target = if (c == 0) (gray(bx, by) - 128) * 8 else 0
@@ -725,15 +516,13 @@ object JpegCodec {
       var s = 0
       var a = math.abs(diff)
       while (a != 0) { s += 1; a >>= 1 }
-      put(s, 4) // DC category (canonical code == category value)
-      if (s > 0) put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-      put(0, 1) // AC: EOB
+      w.put(s, 4) // DC category (canonical code == category value)
+      if (s > 0) w.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
+      w.put(0, 1) // AC: EOB
     }
-    if (nbits > 0) { // pad with 1s per spec
-      while (nbits != 0) put(1, 1)
-    }
-    marker(0xd9) // EOI
-    bos.toByteArray
+    w.flushBits()
+    w.marker(0xd9) // EOI
+    w.toByteArray
   }
 
   /** The progressive (SOF2) twin of [[encodeJpegGrayBlocks]]: the SAME
@@ -749,52 +538,19 @@ object JpegCodec {
                                       components: Int = 3): Array[Byte] = {
     require(wBlocks > 0 && hBlocks > 0)
     require(components == 1 || components == 3)
-    val bos = new java.io.ByteArrayOutputStream()
-    def w8(v: Int): Unit = bos.write(v & 0xff)
-    def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
-    def marker(m: Int): Unit = { w8(0xff); w8(m) }
-    var acc = 0
-    var nbits = 0
-    def put(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1)
-        nbits += 1
-        if (nbits == 8) {
-          bos.write(acc)
-          if (acc == 0xff) bos.write(0x00)
-          acc = 0; nbits = 0
-        }
-        i -= 1
-      }
-    }
-    def flush(): Unit = while (nbits != 0) put(1, 1)
+    val w = new JpegWriter
+    w.marker(0xd8) // SOI
+    w.dqt(Array.fill(64)(1))
+    w.sof(0xc2, 8, wBlocks * 8, hBlocks * 8, Seq.fill(components)(0x11))
+    w.dht(0x00, 4, 0 until 12) // DC 0: categories 0..11 as 4-bit codes (code == category)
+    // AC 0: EOB-run symbols r<<4 for r=0..14, 4-bit codes (code == r)
+    w.dht(0x10, 4, (0 until 15).map(_ << 4))
 
-    marker(0xd8) // SOI
-    marker(0xdb); w16(2 + 1 + 64); w8(0x00)
-    for (_ <- 0 until 64) w8(1)
-    marker(0xc2); w16(8 + 3 * components); w8(8) // SOF2
-    w16(hBlocks * 8); w16(wBlocks * 8); w8(components)
-    for (id <- 1 to components) { w8(id); w8(0x11); w8(0) }
-    // DHT DC 0: categories 0..11 as 4-bit codes (code == category)
-    marker(0xc4); w16(2 + 1 + 16 + 12); w8(0x00)
-    for (l <- 1 to 16) w8(if (l == 4) 12 else 0)
-    for (s <- 0 until 12) w8(s)
-    // DHT AC 0: EOB-run symbols r<<4 for r=0..14, 4-bit codes (code == r)
-    marker(0xc4); w16(2 + 1 + 16 + 15); w8(0x10)
-    for (l <- 1 to 16) w8(if (l == 4) 15 else 0)
-    for (r <- 0 until 15) w8(r << 4)
-
-    def sos(ids: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): Unit = {
-      marker(0xda); w16(6 + 2 * ids.length); w8(ids.length)
-      for (id <- ids) { w8(id); w8(0x00) }
-      w8(ss); w8(se); w8((ah << 4) | al)
-    }
     def target(bx: Int, by: Int, c: Int): Int =
       if (c == 0) (gray(bx, by) - 128) * 8 else 0
 
     // scan 1: DC first, al=1 — diffs of the arithmetic-shifted DC
-    sos(1 to components, 0, 0, 0, 1)
+    w.sos(1 to components, 0, 0, 0, 1)
     val pred = new Array[Int](3)
     for (by <- 0 until hBlocks; bx <- 0 until wBlocks; c <- 0 until components) {
       val t = target(bx, by, c) >> 1
@@ -803,32 +559,32 @@ object JpegCodec {
       var s = 0
       var a = math.abs(diff)
       while (a != 0) { s += 1; a >>= 1 }
-      put(s, 4)
-      if (s > 0) put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
+      w.put(s, 4)
+      if (s > 0) w.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
     }
-    flush()
+    w.flushBits()
 
     // scan 2: DC refinement, ah=1 al=0 — one raw low bit per block
-    sos(1 to components, 0, 0, 1, 0)
+    w.sos(1 to components, 0, 0, 1, 0)
     for (by <- 0 until hBlocks; bx <- 0 until wBlocks; c <- 0 until components)
-      put(target(bx, by, c) & 1, 1)
-    flush()
+      w.put(target(bx, by, c) & 1, 1)
+    w.flushBits()
 
     // scans 3..: one AC first scan per component, all zeros -> one EOB run
     for (id <- 1 to components) {
-      sos(Seq(id), 1, 63, 0, 0)
+      w.sos(Seq(id), 1, 63, 0, 0)
       var n = wBlocks * hBlocks // blocks in this component's grid (4:4:4)
       while (n > 0) {
         var r = 0
         while (r < 14 && (2 << r) <= n) r += 1
         val count = math.min(n, (2 << r) - 1)
-        put(r << 4, 4) // canonical: code == r
-        if (r > 0) put(count - (1 << r), r)
+        w.put(r << 4, 4) // canonical: code == r
+        if (r > 0) w.put(count - (1 << r), r)
         n -= count
       }
-      flush()
+      w.flushBits()
     }
-    marker(0xd9)
-    bos.toByteArray
+    w.marker(0xd9)
+    w.toByteArray
   }
 }

@@ -14,113 +14,35 @@ package graft.operators
   * parallel like the rest of the codec family. Sums are integer-exact by
   * construction (lossless), which is what the m09 analytic gate checks.
   *
-  * Robustness stance identical to [[JpegCodec]]: malformed/truncated/
-  * unsupported payloads return None, never a throw.
+  * Headers and their guards are [[JpegFrame]]'s, shared with the other
+  * processes, so malformed/truncated/unsupported payloads return None,
+  * never a throw, exactly as in [[JpegCodec]]; [[RasterCodec.decode]]
+  * routes SOF3 frames here, and [[decode]] returns None for any other.
   */
 object LosslessJpeg {
-  import JpegCodec.{Bad, bad, Huff, BitReader, extend}
+  import JpegCodec.{BitReader, extend}
+  import JpegFrame.bad
 
   /** Decoded lossless image: `samples` interleaved row-major
     * (x-major, one value per component), full integer precision. */
   final case class LosslessImage(width: Int, height: Int, components: Int,
                                  precision: Int, samples: Array[Int])
 
-  def decode(p: Array[Byte]): Option[LosslessImage] = {
-    if (p == null || p.length < 4 || (p(0) & 0xff) != 0xff ||
-      (p(1) & 0xff) != 0xd8) return None
-    try Some(run(p)) catch {
-      case _: Bad | _: ArrayIndexOutOfBoundsException |
-           _: NegativeArraySizeException => None
-    }
-  }
+  def decode(p: Array[Byte]): Option[LosslessImage] =
+    JpegFrame.decode(p, JpegFrame.Lossless)(decodeFrame)
 
-  private final case class LComp(id: Int, var dcTab: Int = 0)
-
-  private def run(p: Array[Byte]): LosslessImage = {
-    def u8(i: Int) = if (i < p.length) p(i) & 0xff else bad()
-    def be16(i: Int) = (u8(i) << 8) | u8(i + 1)
-
-    var width = 0
-    var height = 0
-    var precision = 0
-    var comps: Array[LComp] = null
-    val huff = new Array[Huff](4)
-    var restartInterval = 0
-    var predictorSel = 0
-    var pt = 0
-
-    var at = 2
-    var done = false
-    while (!done) {
-      if (u8(at) != 0xff) bad()
-      val m = u8(at + 1)
-      if (m == 0xd8 || (m >= 0xd0 && m <= 0xd7)) { at += 2 }
-      else if (m == 0xd9) bad() // EOI before any scan
-      else {
-        val len = be16(at + 2)
-        if (len < 2) bad()
-        val seg = at + 4
-        m match {
-          case 0xc3 => // SOF3 lossless
-            precision = u8(seg)
-            height = be16(seg + 1)
-            width = be16(seg + 3)
-            val nc = u8(seg + 5)
-            if (precision < 2 || precision > 16) bad()
-            if (width <= 0 || height <= 0 || nc <= 0 || nc > 4) bad()
-            if (width.toLong * height * nc > (1L << 24)) bad() // alloc guard
-            comps = Array.tabulate(nc) { i =>
-              val off = seg + 6 + i * 3
-              val hv = u8(off + 1)
-              if (hv != 0x11) bad() // 1x1 sampling only in this decoder
-              LComp(u8(off))
-            }
-          case 0xc0 | 0xc1 | 0xc2 | 0xc9 | 0xca | 0xcb =>
-            bad() // DCT/arithmetic SOFs: not this decoder's process
-          case 0xc4 => // DHT (DC-class tables carry the sample categories)
-            var o = seg
-            while (o < seg + len - 2) {
-              val tc = u8(o) >> 4
-              val th = u8(o) & 0x0f
-              val bits = new Array[Int](17)
-              var total = 0
-              for (l <- 1 to 16) { bits(l) = u8(o + l); total += bits(l) }
-              if (total > 256) bad()
-              val vals = new Array[Byte](total)
-              for (i <- 0 until total) vals(i) = p(o + 17 + i)
-              if (tc == 0) {
-                if (th > 3) bad()
-                huff(th) = new Huff(bits, vals)
-              } // AC-class tables are legal to ship, unused in lossless
-              o += 17 + total
-            }
-          case 0xdd => // DRI
-            restartInterval = be16(seg)
-          case 0xda => // SOS
-            if (comps == null) bad()
-            val ns = u8(seg)
-            if (ns != comps.length) bad() // single fully-interleaved scan
-            for (i <- 0 until ns) {
-              val cid = u8(seg + 1 + i * 2)
-              val c = comps.find(_.id == cid).getOrElse(bad())
-              c.dcTab = u8(seg + 2 + i * 2) >> 4
-            }
-            predictorSel = u8(seg + 1 + ns * 2) // Ss = predictor selector
-            pt = u8(seg + 3 + ns * 2) & 0x0f // Al = point transform
-            if (predictorSel < 1 || predictorSel > 7) bad()
-            if (pt >= precision) bad()
-            done = true
-          case _ => // APPn/COM/DQT(unused): skip
-        }
-        if (!done) at += 2 + len else at = at + 2 + len
-      }
-    }
-    if (comps == null || huff.forall(_ == null)) bad()
-    comps.foreach(c => if (huff(c.dcTab) == null) bad())
-
+  private[operators] def decodeFrame(f: JpegFrame): LosslessImage = {
+    val comps = f.comps
+    val huff = comps.map(f.dcTable) // DC-class tables carry the sample categories
+    val width = f.width
+    val height = f.height
+    val precision = f.precision
+    val restartInterval = f.restartInterval
+    val predictorSel = f.ss // Ss = predictor selector
+    val pt = f.al // Al = point transform
     val nc = comps.length
     val out = new Array[Int](width * height * nc)
-    val reader = new BitReader(p, at)
+    val reader = new BitReader(f.p, f.dataAt)
     val mask = 0xffff
     val defaultPred = 1 << (precision - pt - 1)
     // per-component previous-row buffer and current-row buffer
@@ -139,7 +61,7 @@ object LosslessJpeg {
         }
         var ci = 0
         while (ci < nc) {
-          val s = reader.decode(huff(comps(ci).dcTab))
+          val s = reader.decode(huff(ci))
           if (s > 16) bad()
           val diff =
             if (s == 16) 32768
@@ -208,24 +130,16 @@ object LosslessJpeg {
     val lim = (1 << precision) - 1
     require(samples.forall(v => v >= 0 && v <= lim), "samples exceed precision")
 
-    val bos = new java.io.ByteArrayOutputStream()
-    def w8(v: Int): Unit = bos.write(v & 0xff)
-    def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
-    def marker(m: Int): Unit = { w8(0xff); w8(m) }
-
-    marker(0xd8) // SOI
-    marker(0xc3); w16(8 + 3 * components); w8(precision) // SOF3
-    w16(height); w16(width); w8(components)
-    for (i <- 0 until components) { w8(i + 1); w8(0x11); w8(0) }
+    val w = new JpegWriter
+    w.marker(0xd8) // SOI
+    w.sof(0xc3, precision, width, height, Seq.fill(components)(0x11)) // SOF3
 
     // DHT: symbols 0..16 with EncLengths, canonical order
     val bitsPerLen = new Array[Int](17)
     EncLengths.foreach(l => bitsPerLen(l) += 1)
-    marker(0xc4); w16(2 + 17 + 17); w8(0x00)
-    for (l <- 1 to 16) w8(bitsPerLen(l))
     // canonical: symbols sorted by (length, symbol) — EncLengths is
     // already nondecreasing so symbol order 0..16 IS canonical order
-    for (sym <- 0 to 16) w8(sym)
+    w.dht(0x00, bitsPerLen.toSeq.tail, 0 to 16)
     // derive the actual codes the decoder's Annex C reconstruction yields
     val codeOf = new Array[Int](17)
     val lenOf = new Array[Int](17)
@@ -240,28 +154,8 @@ object LosslessJpeg {
       code <<= 1
     }
 
-    if (restartInterval > 0) { marker(0xdd); w16(4); w16(restartInterval) }
-
-    marker(0xda); w16(6 + 2 * components); w8(components) // SOS
-    for (i <- 0 until components) { w8(i + 1); w8(0x00) }
-    w8(predictor); w8(0); w8(0) // Ss = predictor, Se = 0, AhAl = 0
-
-    var acc = 0
-    var nbits = 0
-    def put(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1)
-        nbits += 1
-        if (nbits == 8) {
-          w8(acc)
-          if ((acc & 0xff) == 0xff) w8(0x00) // byte stuffing
-          acc = 0; nbits = 0
-        }
-        i -= 1
-      }
-    }
-    def flushBits(): Unit = while (nbits != 0) put(1, 1)
+    w.dri(restartInterval)
+    w.sos(1 to components, predictor, 0, 0, 0) // Ss = predictor, Se = 0, AhAl = 0
 
     val defaultPred = 1 << (precision - 1)
     val prevRow = Array.ofDim[Int](components, width)
@@ -274,8 +168,8 @@ object LosslessJpeg {
       var x = 0
       while (x < width) {
         if (restartInterval > 0 && sinceRestart == restartInterval) {
-          flushBits()
-          marker(0xd0 + (rstIdx & 7))
+          w.flushBits()
+          w.marker(0xd0 + (rstIdx & 7))
           rstIdx += 1
           sinceRestart = 0
           fresh = true
@@ -304,15 +198,15 @@ object LosslessJpeg {
           curRow(ci)(x) = v
           // difference folded to [-32768, 32767]; -32768 codes as +32768
           val diff = ((v - px + 32768) & 0xffff) - 32768
-          if (diff == -32768) put(codeOf(16), lenOf(16))
+          if (diff == -32768) w.put(codeOf(16), lenOf(16))
           else {
             var mag = if (diff < 0) -diff else diff
             var s = 0
             while (mag != 0) { mag >>= 1; s += 1 }
-            put(codeOf(s), lenOf(s))
+            w.put(codeOf(s), lenOf(s))
             if (s > 0) {
               val d = if (diff < 0) diff - 1 else diff
-              put(d & ((1 << s) - 1), s)
+              w.put(d & ((1 << s) - 1), s)
             }
           }
           ci += 1
@@ -328,8 +222,8 @@ object LosslessJpeg {
       }
       y += 1
     }
-    flushBits()
-    marker(0xd9) // EOI
-    bos.toByteArray
+    w.flushBits()
+    w.marker(0xd9) // EOI
+    w.toByteArray
   }
 }

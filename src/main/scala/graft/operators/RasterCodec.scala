@@ -4,12 +4,12 @@ import java.util.zip.{CRC32, Deflater, Inflater}
 
 /** Dependency-free raster codecs: uncompressed BMP (plain pixel array),
   * PNG (zlib via `java.util.zip` + the five standard scanline filters),
-  * baseline + progressive (SOF2) JPEG (via [[JpegCodec]]), arithmetic-
-  * coded JPEG — sequential SOF9 and progressive SOF10, QM-coder (via
-  * [[ArithJpeg]]) — lossless JPEG (SOF3, via [[LosslessJpeg]]), GIF
-  * LZW (via [[GifCodec]]), and baseline TIFF (none/LZW/PackBits, both
-  * byte orders, via [[TiffCodec]]) — the whole image family decodes for
-  * real. Hierarchical JPEG (SOF11+) returns None.
+  * JPEG (one header front end, [[JpegFrame]], and a back-end per process:
+  * baseline + progressive [[JpegCodec]], 12-bit [[Jpeg12]], arithmetic
+  * SOF9/SOF10 [[ArithJpeg]], lossless SOF3 [[LosslessJpeg]]), GIF LZW
+  * (via [[GifCodec]]), and baseline TIFF (none/LZW/PackBits, both byte
+  * orders, via [[TiffCodec]]) — the whole image family decodes for real.
+  * Hierarchical JPEG (SOF5+) returns None.
   *
   * This is the decode step behind [[Multimodal.decodeFeatures]]: the
   * reference pipeline fetches binary content eagerly and hands it to
@@ -246,29 +246,31 @@ object RasterCodec {
     Some(Raster(width, height, channels, out))
   }
 
-  /** Decode whatever the payload's header says it is; BMP, PNG, JPEG
-    * (baseline + progressive SOF2 via [[JpegCodec]], arithmetic SOF9 +
-    * SOF10 via [[ArithJpeg]], lossless SOF3 via [[LosslessJpeg]] and
-    * 12-bit extended sequential SOF1 via [[Jpeg12]] — the high-precision
-    * families map to 8-bit by their top bits, the standard display
-    * convention; the typed full-precision paths are
-    * `Multimodal.decodeLosslessFeatures`/`decodeJpeg12Features`), and
-    * GIF ([[GifCodec]]). Hierarchical JPEG (SOF11+) returns None. */
+  /** Decode whatever the payload's header says it is: BMP, PNG, GIF
+    * ([[GifCodec]]), TIFF ([[TiffCodec]]) or JPEG. A JPEG header is parsed
+    * once, by [[JpegFrame]], and its SOF marker and precision pick the
+    * back-end: SOF0/SOF2 and 8-bit SOF1 [[JpegCodec]], 12-bit SOF1
+    * [[Jpeg12]], SOF9/SOF10 [[ArithJpeg]], SOF3 [[LosslessJpeg]]. The
+    * high-precision processes map to 8-bit by their top bits, the standard
+    * display convention; the typed full-precision paths are
+    * `Multimodal.decodeLosslessFeatures`/`decodeJpeg12Features`. Any other
+    * process (hierarchical SOF5+, arithmetic lossless SOF11) returns None. */
   def decode(p: Array[Byte]): Option[Raster] =
     Multimodal.sniffImageHeader(p).flatMap {
       case ("bmp", _, _) => decodeBmp(p)
       case ("png", _, _) => decodePng(p)
-      case ("jpeg", _, _) =>
-        JpegCodec.decodeJpeg(p)
-          .orElse(ArithJpeg.decode(p))
-          .orElse(Jpeg12.decode(p).map(img => Raster(
-            img.width, img.height, img.components,
-            img.samples.map(v => ((v >> 4) & 0xff).toByte))))
-          .orElse(LosslessJpeg.decode(p).map { img =>
-            val shift = math.max(0, img.precision - 8)
-            Raster(img.width, img.height, img.components,
-              img.samples.map(v => ((v >> shift) & 0xff).toByte))
-          })
+      case ("jpeg", _, _) => JpegFrame.decode(p) { f =>
+        def top8(samples: Array[Int], precision: Int): Raster = Raster(
+          f.width, f.height, f.comps.length,
+          samples.map(v => ((v >> math.max(0, precision - 8)) & 0xff).toByte))
+        f.process match {
+          case JpegFrame.Huffman8 => JpegCodec.decodeFrame(f)
+          case JpegFrame.Huffman12 => top8(Jpeg12.decodeFrame(f).samples, 12)
+          case JpegFrame.Arithmetic => ArithJpeg.decodeFrame(f)
+          case JpegFrame.Lossless =>
+            top8(LosslessJpeg.decodeFrame(f).samples, f.precision)
+        }
+      }
       case ("gif", _, _) => GifCodec.decodeGif(p)
       case ("tiff", _, _) => TiffCodec.decode(p)
       case _ => None

@@ -33,6 +33,15 @@ class CodecFuzzSpec extends AnyFunSuite {
           org.apache.spark.sql.types.LongType)))))),
     ("dispatch", RasterCodec.decode _))
 
+  /** Natural-order coefficients with a few signed AC terms. */
+  private def fuzzCoefs(bx: Int, by: Int, ci: Int): Array[Int] = {
+    val c = new Array[Int](64)
+    c(0) = (bx * 53 + by * 29 + ci * 17) % 200 - 100
+    c(1) = (bx + by + ci) % 5 - 2
+    c(20) = if ((bx + by) % 2 == 0) 3 else -1
+    c
+  }
+
   private def validPayloads: Seq[(String, Array[Byte])] = {
     val rgb = Array.tabulate(16 * 16 * 3)(i => (i * 7 % 256).toByte)
     val palette = Array.tabulate(768)(i => (i % 256).toByte)
@@ -61,6 +70,17 @@ class CodecFuzzSpec extends AnyFunSuite {
         (bx, by) => bx * 64 + by * 32 + 9)),
       ("jpeg-12bit", Jpeg12.encode12GrayBlocks(2, 2,
         (bx, by) => bx * 1024 + by * 512 + 100)),
+      // SOF10 scans and every RSTn search: the progressive arithmetic scan
+      // loop, and restart intervals in the lossless, 12-bit and arithmetic
+      // entropy decoders
+      ("jpeg-arith-prog", ArithJpeg.encodeArithProgressive(2, 2, 3, fuzzCoefs,
+        ArithJpeg.standardScript(3))),
+      ("jpeg-lossless-rst", LosslessJpeg.encode(9, 7, 1, 12, 4,
+        Array.tabulate(63)(i => (i * 131 + 7) % 4096), restartInterval = 5)),
+      ("jpeg-12bit-rst", Jpeg12.encode12GrayBlocks(3, 2,
+        (bx, by) => bx * 1024 + by * 512 + 100, restartInterval = 2)),
+      ("jpeg-arith-rst", ArithJpeg.encodeCoefBlocks(3, 2, 1, fuzzCoefs,
+        restartInterval = 2)),
       ("flac", FlacCodec.encode(16000, 16, 1,
         Array.tabulate(192)(i => ((i * 37) % 1024) - 512),
         plan = FlacCodec.PlanFixed(2))),
