@@ -466,27 +466,6 @@ object Bench {
     "x07_token_budget_degenerate" -> 4.1,
     "x08_paragraph_dedup_hot" -> 4.0, "x09_quantile_edges" -> 1.5)
 
-  /** Cluster-cost observability (r11): per-query SHUFFLE WRITE and SPILL
-    * volume next to every wall time, so the artifact itself shows which
-    * rows move data and which stream — at 100 TB the shuffle column IS
-    * the cost model, and a plan regression that keeps the wall time but
-    * doubles the shuffle would otherwise be invisible at sf0.1.
-    * Listener deltas are read after the run (the bus drains within the
-    * quiesce sleep; values are observability, not gates). */
-  private object TaskMetricsListener
-      extends org.apache.spark.scheduler.SparkListener {
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    val spillBytes = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spillBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-    }
-  }
-
   /** Machine-calibration probe (VERDICT r11 #1): a pinned, data-independent
     * CPU+shuffle workload run FIRST in every adjudicating bench session.
     * All sf0.1 budgets were measured on the builder's reference box; a
@@ -782,7 +761,7 @@ object Bench {
 
   /** Release caches, force a full collection and let the heap settle so
     * the next timed run starts from a quiet allocator. */
-  private def quiesce(): Unit = {
+  private[graft] def quiesce(): Unit = {
     SparkEntry.releaseCaches()
     System.gc()
     Thread.sleep(250)
@@ -791,7 +770,7 @@ object Bench {
   /** Re-run one query in a freshly forked single-query JVM (cold
     * SparkSession, nothing else on the heap) and return its median time.
     * Used to adjudicate in-suite budget breaches automatically. */
-  private def isolatedRun(name: String, sfDir: String, cpus: String,
+  private def isolatedRun(name: String, sfDir: String, cpus: Int,
                           nRuns: Int = 3, timeoutSec: Long = 600): Option[Double] = {
     import scala.jdk.CollectionConverters._
     val javaBin = sys.props("java.home") + "/bin/java"
@@ -804,7 +783,7 @@ object Bench {
     pb.environment().put("SPARK_GRAFT_BENCH_ONLY", name)
     pb.environment().put("SPARK_GRAFT_BENCH_ISOLATED", "1")
     pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-    pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+    pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
     pb.environment().put("SPARK_GRAFT_BENCH_RUNS", nRuns.toString)
     pb.redirectErrorStream(false)
     try {
@@ -813,15 +792,25 @@ object Bench {
       p.getErrorStream.readAllBytes()
       val done = p.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
       if (!done) { p.destroyForcibly(); return None }
-      // The child prints the standard one-line JSON; pull this query's time.
-      val re = ("\"" + java.util.regex.Pattern.quote(name) + "\":([-0-9.eE]+)").r
-      re.findFirstMatchIn(out).map(_.group(1).toDouble).filter(_ >= 0)
+      // The child prints the standard one-line JSON; take this query's time.
+      out.linesIterator.flatMap(queryTimes(_).get(name)).toSeq.lastOption.filter(_ >= 0)
     } catch { case _: Throwable => None }
   }
 
+  /** Per-query times of one bench JSON line: its `queries` object, empty
+    * for anything else. */
+  private[graft] def queryTimes(line: String): Map[String, Double] =
+    try org.json4s.jackson.JsonMethods.parse(line) \ "queries" match {
+      case org.json4s.JObject(fs) => fs.collect {
+        case (k, org.json4s.JDouble(v)) => k -> v
+        case (k, org.json4s.JInt(v)) => k -> v.toDouble
+      }.toMap
+      case _ => Map.empty
+    } catch { case _: Throwable => Map.empty }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     // Set for forked single-query children so they never recurse into
     // further isolation runs of their own.
     val isChild = sys.env.get("SPARK_GRAFT_BENCH_ISOLATED").contains("1")
@@ -834,16 +823,12 @@ object Bench {
     // single-run variance.
     val nRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt)
       .filter(_ >= 1).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expressions.GraftSparkSessionExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(TaskMetricsListener)
+    val spark = GraftSession.local(cpus)
+    // Per-run jobs, stages, shuffle, spill and plan shape: the artifact
+    // shows which rows move data and where their time goes — at 100 TB the
+    // shuffle column IS the cost model, and a plan regression that keeps
+    // the wall time but doubles the shuffle is otherwise invisible at sf0.1.
+    val profile = QueryProfile.attach(spark)
     // Machine calibration: children skip it (the parent scales budgets
     // before comparing their reported raw walls). Two probes — CPU+shuffle
     // and sustained disk I/O — scale budgets by the worse regime.
@@ -866,24 +851,14 @@ object Bench {
           val runs = (1 to nRuns).map { _ =>
             quiesce()
             val gc0 = gcMillis()
-            val sh0 = TaskMetricsListener.shuffleBytes.get
-            val sp0 = TaskMetricsListener.spillBytes.get
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            val t = (System.nanoTime() - t0) / 1e9
-            // quiesce()'s settle sleep next iteration drains the listener
-            // bus; for the LAST run drain here before reading the deltas.
-            Thread.sleep(150)
-            (t, gcMillis() - gc0,
-              TaskMetricsListener.shuffleBytes.get - sh0,
-              TaskMetricsListener.spillBytes.get - sp0)
+            val run = profile.record(
+              fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+            (run.wallS, gcMillis() - gc0, run)
           }
-          val (medT, medGc, medSh, medSp) =
-            runs.sortBy(_._1).apply((runs.size - 1) / 2)
-          name -> (medT, medGc, medSh, medSp)
+          name -> runs.sortBy(_._1).apply((runs.size - 1) / 2)
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          name -> (-1.0, 0L, 0L, 0L)
+          name -> (-1.0, 0L, QueryProfile.Failed)
         } finally SparkEntry.releaseCaches()
       }
     }
@@ -893,18 +868,8 @@ object Bench {
     // is checked against the committed ceiling.
     def loadTimesJson(envVar: String): Map[String, Double] =
       sys.env.get(envVar).map { p =>
-        try {
-          val txt = new String(
-            java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
-          val j = org.json4s.jackson.JsonMethods.parse(txt)
-          (j \ "queries") match {
-            case org.json4s.JObject(fs) => fs.collect {
-              case (k, org.json4s.JDouble(v)) => k -> v
-              case (k, org.json4s.JInt(v)) => k -> v.toDouble
-            }.toMap
-            case _ => Map.empty[String, Double]
-          }
-        } catch { case _: Throwable => Map.empty[String, Double] }
+        try queryTimes(java.nio.file.Files.readString(java.nio.file.Paths.get(p)))
+        catch { case _: Throwable => Map.empty[String, Double] }
       }.getOrElse(Map.empty)
     val sf01Times = loadTimesJson("SPARK_GRAFT_SF01_JSON")
     // 3-point scale probe (VERDICT r11 #6): when SPARK_GRAFT_SF1_JSON also
@@ -919,7 +884,7 @@ object Bench {
     // otherwise this-run / sf0.1 (the classic sf1 pass).
     val ratioBase = if (scale3Mode) sf1Times else sf01Times
     val ratios = results.collect {
-      case (n, (t, _, _, _)) if t > 0 && ratioBase.get(n).exists(_ > 0) =>
+      case (n, (t, _, _)) if t > 0 && ratioBase.get(n).exists(_ > 0) =>
         n -> math.rint(t / ratioBase(n) * 100) / 100
     }
     // First-step ratios recomputed from the two committed artifacts so the
@@ -960,7 +925,7 @@ object Bench {
     val breaches =
       if (isChild || sf1Mode) Seq.empty
       else results.collect {
-        case (n, (t, _, _, _))
+        case (n, (t, _, _))
           if t >= 0 && budgets.get(n).exists(b => t > budgetCeil(b) * scale) => n
       }
     // sf1 self-adjudication (VERDICT r11 #3): isolate ONLY the
@@ -985,8 +950,8 @@ object Bench {
     val isolatedMap = isolated.toMap
     // In-suite byte metrics per row (MB) — work is deterministic, so the
     // in-suite census speaks for the isolated re-run too.
-    val rowBytesMb = results.collect { case (n, (t, _, sh, sp)) if t >= 0 =>
-      n -> (sh / 1048576.0, sp / 1048576.0)
+    val rowBytesMb = results.collect { case (n, (t, _, run)) if t >= 0 =>
+      n -> (run.shuffleBytes / 1048576.0, run.spillBytes / 1048576.0)
     }.toMap
     val ratioVerdicts = ratioAdjudicated.map { case (n, r) =>
       // scale3 clearing mirrors both flags: the adjudicated step2 ratio
@@ -1017,14 +982,14 @@ object Bench {
       case (n, ti) if budgets.get(n).exists(b => ti > budgetCeil(b) * scale) =>
         n -> ti
     }
-    val qs = results.map { case (k, (t, _, _, _)) => "\"" + k + "\":" + t }
+    val qs = results.map { case (k, (t, _, _)) => "\"" + k + "\":" + t }
       .mkString("{", ",", "}")
-    val gcs = results.map { case (k, (_, g, _, _)) => "\"" + k + "\":" + g }
+    val gcs = results.map { case (k, (_, g, _)) => "\"" + k + "\":" + g }
       .mkString("{", ",", "}")
     def mb(b: Long): String = "%.2f".formatLocal(java.util.Locale.ROOT, b / 1048576.0)
-    val shs = results.map { case (k, (_, _, s, _)) => "\"" + k + "\":" + mb(s) }
+    val shs = results.map { case (k, (_, _, r)) => "\"" + k + "\":" + mb(r.shuffleBytes) }
       .mkString("{", ",", "}")
-    val sps = results.map { case (k, (_, _, _, s)) => "\"" + k + "\":" + mb(s) }
+    val sps = results.map { case (k, (_, _, r)) => "\"" + k + "\":" + mb(r.spillBytes) }
       .mkString("{", ",", "}")
     val iso = isolated.map { case (k, t) => "\"" + k + "\":" + t }
       .mkString("{", ",", "}")
@@ -1049,9 +1014,22 @@ object Bench {
       (if (ratioAdjudicated.nonEmpty)
         s""","ratio_adjudicated":${numMap(ratioAdjudicated)},"ratio_verdict":${strMap(ratioVerdicts)}"""
        else "")
+    // Per-row profile of the median run: full line only, the compact
+    // stdout line keeps its fields.
+    val profiles = {
+      import org.json4s.JsonDSL._
+      org.json4s.jackson.JsonMethods.compact(org.json4s.JObject(results.toList.map {
+        case (k, (_, _, r)) => k -> (("jobs" -> r.jobs.size) ~ ("stages" -> r.stages.size) ~
+          ("task_s" -> r3(r.taskS)) ~ ("driver_gap_s" -> r3(r.driverGapS)) ~
+          ("exchanges" -> r.exchanges) ~ ("reused_exchanges" -> r.reusedExchanges) ~
+          ("worst_spill_stage" -> r.worstSpill.map(s => ("id" -> s.id) ~
+            ("spill_mb" -> r3(s.spillBytes / 1048576.0)) ~ ("name" -> s.name))
+            .getOrElse(org.json4s.JNull)))
+      }))
+    }
     val total = results.map(_._2._1).filter(_ >= 0).sum
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"gc_ms":$gcs,"shuffle_mb":$shs,"spill_mb":$sps,"isolated":$iso$extra,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"gc_ms":$gcs,"shuffle_mb":$shs,"spill_mb":$sps,"profile":$profiles,"isolated":$iso$extra,"sf":"$sfDir"}"""
     // Driver-parseability (VERDICT r12 #3 — two rounds of `parsed: null`):
     // the driver captures only the LAST ~2000 chars of stdout, and the
     // full line (4 per-query maps x ~117 rows) outgrew that window rounds
@@ -1075,7 +1053,7 @@ object Bench {
         System.err.println(s"[bench] artifact write failed: ${e.getMessage}")
       }
       def r2(x: Double): Double = math.rint(x * 100) / 100
-      val byTime = results.map { case (k, (t, _, _, _)) => k -> t }
+      val byTime = results.map { case (k, (t, _, _)) => k -> t }
         .sortBy { case (_, t) => -t }
       // Gate maps in the compact line print 2-decimal values and cap at
       // 12 entries each (largest first, omission counted), so even a

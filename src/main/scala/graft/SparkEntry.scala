@@ -50,7 +50,7 @@ object SparkEntry {
     * re-executing its child; when the child is a pure map pipeline (the
     * container/codec reads: scan -> decode -> explode, no exchange whose
     * materialized output the sampler could reuse), that re-execution runs
-    * the WHOLE decode a second time — JobTrace showed the m25 decode
+    * the WHOLE decode a second time — a per-job trace showed the m25 decode
     * twice at ~0.8s per pass. The eager localCheckpoint materializes the
     * decoded rows once (they are the small, structured OUTPUT — cheap to
     * hold; the compressed payloads are not retained) and the sort samples
@@ -972,9 +972,8 @@ object SparkEntry {
       import graft.operators.Similarity
       val emb = t(s, dir, "embeddings")
       val n = emb.count()
-      // production shape (the shared Similarity.scaledSemDedupParams —
-      // also used by the SemDedupScaleDiag pair-space census, so the
-      // committed census always adjudicates THIS parameterization): train
+      // production shape (Similarity.scaledSemDedupParams, the
+      // parameterization the committed pair-space census measured): train
       // the quantizer on a bounded deterministic sample, then assign ALL
       // vectors and dedup within cells exactly as d17 does.
       val (k, stride) = Similarity.scaledSemDedupParams(n)

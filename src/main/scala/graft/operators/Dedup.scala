@@ -311,10 +311,9 @@ object Dedup {
   }
 
   /** The per-band bucket keys of a minhash signature column: one xxhash64
-    * long per band over (band index, the band's signature slice). Shared
-    * with the scale diagnostics ([[graft.tools.LshScaleDiag]]) so the
-    * censused bucket structure cannot drift from the one the operators
-    * join on. The band index inside the hash keeps cross-band value
+    * long per band over (band index, the band's signature slice). The
+    * sf1/sf10 band-bucket census in SURVEY.md counted these keys. The
+    * band index inside the hash keeps cross-band value
     * coincidences from colliding even before the explicit band_id join
     * key does. */
   private[graft] def bandHashKeys(sig: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {

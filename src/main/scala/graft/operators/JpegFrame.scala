@@ -244,10 +244,11 @@ private[operators] object JpegFrame {
 
   /** Per process: the component counts its back-end decodes, its largest
     * sampling factor, and its allocation cap on width * height *
-    * components. The Huffman 8-bit cap is only that a padded plane fits
-    * one array, which every process must meet. */
+    * components, which a header of a few bytes can otherwise drive to
+    * gigabytes. The Huffman 8-bit cap, 2^28, still admits a 24 MP RGB
+    * photo (72 M samples). */
   private val Limits: Map[Int, (Set[Int], Int, Long)] = Map(
-    Huffman8 -> ((Set(1, 3), 2, Long.MaxValue)),
+    Huffman8 -> ((Set(1, 3), 2, 1L << 28)),
     Huffman12 -> ((Set(1, 3), 1, 1L << 24)),
     Arithmetic -> ((Set(1, 3, 4), 2, 1L << 26)),
     Lossless -> ((Set(1, 2, 3, 4), 1, 1L << 24)))

@@ -23,9 +23,8 @@ object Similarity {
     * cluster), and the quantizer trains on a bounded ~20k-vector strided
     * sample (k-means quality needs coverage, not every vector —
     * full-corpus training would be n*k with k ~ n, i.e. quadratic).
-    * SHARED by the x03 gate (SparkEntry) and the pair-space census
-    * (graft.tools.SemDedupScaleDiag) so the census can never silently
-    * drift from the fixture it adjudicates. Returns (k, sampleStride);
+    * The x03 row uses it, and the pair-space census of OPTIMIZATION_r14.md
+    * measured this parameterization. Returns (k, sampleStride);
     * Lloyd iterations are [[ScaledSemDedupIters]]. */
   def scaledSemDedupParams(n: Long): (Int, Long) =
     (math.max(8L, n / 1000).toInt, math.max(1L, n / 20000))

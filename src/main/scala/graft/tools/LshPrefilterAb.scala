@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale A/B for the minhash sketch prefilter (diagnostic main; not part
   * of the library surface): runs d02's minhashNearDupPairs twice at the
   * given sfDir — prefilter ON (default margin 1/4) and prefilter OFF
@@ -19,16 +17,7 @@ import org.apache.spark.sql.SparkSession
 object LshPrefilterAb {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expressions.GraftSparkSessionExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val docs = graft.Tables.t(spark, sfDir, "documents")
     def pairs(margin: Int) = graft.operators.Dedup
       .minhashNearDupPairs(docs, "doc_id", "text", marginQuarters = margin)

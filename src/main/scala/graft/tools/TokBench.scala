@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Interleaved A/B of the tokenize forms — `graft_clean_tokens` (codegen
@@ -18,12 +17,7 @@ object TokBench {
   def main(args: Array[String]): Unit = {
     val rows = if (args.length > 0) args(0).toInt else 200000
     val reps = if (args.length > 1) args(1).toInt else 5
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.extensions", "graft.expressions.GraftSparkSessionExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
+    val spark = graft.GraftSession.local()
     // word-like text, ~60 tokens/row, stray double spaces included
     val base = spark.range(rows).select(col("id"),
       concat_ws(" ", (0 until 60).map(i =>

@@ -21,6 +21,11 @@ object GraftShims {
     session.asInstanceOf[classic.SparkSession]
       .sessionState.catalogManager.reset()
 
+  /** Block until every event posted so far has reached every listener;
+    * throws a TimeoutException after Spark's 10 s limit. */
+  def drainListenerBus(session: SparkSession): Unit =
+    session.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Streaming-tagged DataFrame over a file relation — what a v1
     * streaming Source's `getBatch` must return (MicroBatchExecution
     * asserts `isStreaming`; FileStreamSource builds its batches the same

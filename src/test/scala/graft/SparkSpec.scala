@@ -4,14 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared local SparkSession for all suites (one JVM, forked by sbt). */
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.expressions.GraftSparkSessionExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = GraftSession.local(4)
 }
 
 trait SparkSpec { this: org.scalatest.Suite =>

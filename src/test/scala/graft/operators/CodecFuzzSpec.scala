@@ -52,6 +52,8 @@ class CodecFuzzSpec extends AnyFunSuite {
       ("jpeg", JpegCodec.encodeJpegGrayBlocks(2, 2, (bx, by) => bx * 64 + by * 32)),
       ("jpeg-prog", JpegCodec.encodeJpegGrayBlocksProgressive(2, 2,
         (bx, by) => bx * 64 + by * 32)),
+      // a header that declares a 2.1 GB plane
+      ("jpeg-huge-sof", JpegFrameSpec.hugeBaseline),
       ("gif", GifCodec.encodeGif(16, 16, palette, idx)),
       ("wav", AudioCodec.encodeWavPcm16(8000, 2,
         Array.tabulate(200)(i => (i * 331 % 65536 - 32768).toShort))),

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * same malformed header must be rejected the same way, whichever of the
   * four back-ends the frame's SOF marker selects. */
 class JpegFrameSpec extends AnyFunSuite {
+  import JpegFrameSpec._
 
   private val gray = (bx: Int, by: Int) => (bx * 37 + by * 101 + 13) % 256
   private def coefs(bx: Int, by: Int, ci: Int): Array[Int] = {
@@ -36,8 +37,6 @@ class JpegFrameSpec extends AnyFunSuite {
     ("arithmetic progressive", ArithJpeg.encodeArithProgressive(3, 2, 3, coefs,
       ArithJpeg.standardScript(3)),
       b => ArithJpeg.decode(b).map(_.data.toSeq.map(_.toInt))))
-
-  private def be16(b: Array[Byte], i: Int): Int = ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
 
   /** Copy of `b` with `fill` 0xFF fill bytes before every marker after
     * SOI: header markers, RSTn inside entropy data, and EOI. */
@@ -121,11 +120,45 @@ class JpegFrameSpec extends AnyFunSuite {
     assert(failures.isEmpty, failures.mkString("second SOF accepted by: ", "; ", ""))
   }
 
+  test("a tiny baseline stream cannot declare a multi-gigabyte frame") {
+    // 46000 x 46000 gray is a 2.1 GB plane; the header walk must refuse it
+    // before any back-end allocates (a large test heap would absorb it)
+    val huge = hugeBaseline
+    assert(huge.length < 200)
+    assert(JpegFrame.decode(huge)(_ => ()).isEmpty, "header walk accepted 46000x46000")
+    assert(JpegCodec.decodeJpeg(huge).isEmpty && RasterCodec.decode(huge).isEmpty)
+    // a 24 MP RGB photo's header stays inside the cap
+    val rgb = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(
+      new java.awt.image.BufferedImage(16, 16, java.awt.image.BufferedImage.TYPE_INT_RGB), "jpeg", rgb)
+    val photo = withSize(rgb.toByteArray, 6000, 4000)
+    assert(JpegFrame.decode(photo)(f => f.width.toLong * f.height * f.comps.length)
+      .contains(72000000L))
+  }
+}
+
+object JpegFrameSpec {
+  private def be16(b: Array[Byte], i: Int): Int = ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
+
   /** Offset of the stream's frame header (SOFn). */
   private def sofAt(b: Array[Byte]): Int = {
     var i = 2
-    def isSof(m: Int) = m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc
-    while (!isSof(b(i + 1) & 0xff)) i += 2 + be16(b, i + 2)
+    while (!JpegFrame.isSof(b(i + 1) & 0xff)) i += 2 + be16(b, i + 2)
     i
   }
+
+  /** Copy of a single-frame stream with its SOF's width and height set. */
+  def withSize(b: Array[Byte], width: Int, height: Int): Array[Byte] = {
+    val out = b.clone()
+    val i = sofAt(out)
+    for ((v, at) <- Seq(height -> (i + 5), width -> (i + 7))) {
+      out(at) = (v >> 8).toByte
+      out(at + 1) = v.toByte
+    }
+    out
+  }
+
+  /** A baseline gray stream whose SOF0 declares 46000 x 46000. */
+  def hugeBaseline: Array[Byte] =
+    withSize(JpegCodec.encodeJpegGrayBlocks(1, 1, (_, _) => 128), 46000, 46000)
 }

@@ -1,7 +1,5 @@
 package graft.tables
 
-import org.apache.spark.sql.SparkSession
-
 /** Test helper main run in a SEPARATE JVM by `MultiProcessCommitSpec`:
   * appends `count` single-row commits to the lake table at `loc`. The
   * commit protocol's real adversary is another OS process (a second
@@ -11,11 +9,7 @@ import org.apache.spark.sql.SparkSession
 object ForkedWriter {
   def main(args: Array[String]): Unit = {
     val Array(loc, startId, count) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(2)
     try {
       import spark.implicits._
       val t = LakeTable.load(spark, loc)
