@@ -1023,7 +1023,8 @@ object Bench {
           ("task_s" -> r3(r.taskS)) ~ ("driver_gap_s" -> r3(r.driverGapS)) ~
           ("exchanges" -> r.exchanges) ~ ("reused_exchanges" -> r.reusedExchanges) ~
           ("worst_spill_stage" -> r.worstSpill.map(s => ("id" -> s.id) ~
-            ("spill_mb" -> r3(s.spillBytes / 1048576.0)) ~ ("name" -> s.name))
+            ("spill_mb" -> r3(s.spillBytes / 1048576.0)) ~ ("name" -> s.name) ~
+            ("phase" -> s.phase))
             .getOrElse(org.json4s.JNull)))
       }))
     }

@@ -28,6 +28,7 @@ final class QueryProfile private (spark: SparkSession)
   private val jobs = mutable.ArrayBuffer.empty[Job]
   private val stageSums = mutable.LinkedHashMap.empty[Int, StageSums]
   private val stageInfo = mutable.Map.empty[Int, (String, Int)]
+  private val stagePhase = mutable.Map.empty[Int, String]
   private var exchanges, reusedExchanges = 0
   private var plan: Option[SparkPlan] = None
 
@@ -35,8 +36,13 @@ final class QueryProfile private (spark: SparkSession)
   def finalPlan: Option[SparkPlan] = synchronized(plan)
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-    if (open) jobStarts(e.jobId) = (e.time, Option(e.properties)
-      .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    if (open) {
+      val desc = Option(e.properties)
+        .flatMap(p => Option(p.getProperty(DescriptionKey))).getOrElse("")
+      jobStarts(e.jobId) = (e.time, desc)
+      // a stage shared by several jobs belongs to the first that ran it
+      e.stageIds.foreach(id => stagePhase.getOrElseUpdate(id, desc))
+    }
   }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
@@ -78,7 +84,7 @@ final class QueryProfile private (spark: SparkSession)
     GraftShims.drainListenerBus(spark)
     synchronized {
       open = true
-      jobStarts.clear(); jobs.clear(); stageSums.clear(); stageInfo.clear()
+      jobStarts.clear(); jobs.clear(); stageSums.clear(); stageInfo.clear(); stagePhase.clear()
       exchanges = 0; reusedExchanges = 0; plan = None
     }
     val from = System.currentTimeMillis()
@@ -92,7 +98,8 @@ final class QueryProfile private (spark: SparkSession)
       open = false
       val stages = stageSums.toSeq.map { case (id, s) =>
         val (name, tasks) = stageInfo.getOrElse(id, ("", 0))
-        Stage(id, name, tasks, s.shuffleWrite, s.shuffleRead, s.spill, s.taskMs)
+        Stage(id, name, stagePhase.getOrElse(id, ""), tasks, s.shuffleWrite,
+          s.shuffleRead, s.spill, s.taskMs)
       }
       val js = jobs.toSeq.sortBy(_.startMs)
       Run(wallS, from, js, stages, exchanges, reusedExchanges,
@@ -109,8 +116,11 @@ final class QueryProfile private (spark: SparkSession)
 object QueryProfile {
   final case class Job(id: Int, startMs: Long, endMs: Long, description: String)
 
-  final case class Stage(id: Int, name: String, tasks: Int, shuffleWriteBytes: Long,
-                         shuffleReadBytes: Long, spillBytes: Long, taskMs: Long)
+  /** `phase` is the description of the job that ran the stage (the
+    * [[withPhase]] label its operator set), "" when there was none. */
+  final case class Stage(id: Int, name: String, phase: String, tasks: Int,
+                         shuffleWriteBytes: Long, shuffleReadBytes: Long,
+                         spillBytes: Long, taskMs: Long)
 
   final case class Run(wallS: Double, startMs: Long, jobs: Seq[Job], stages: Seq[Stage],
                        exchanges: Int, reusedExchanges: Int, driverGapS: Double) {
@@ -121,6 +131,21 @@ object QueryProfile {
   }
 
   val Failed: Run = Run(-1.0, 0L, Nil, Nil, 0, 0, 0.0)
+
+  private val DescriptionKey = "spark.job.description"
+
+  /** Run `body` with every Spark job it starts described as `label`, then
+    * restore the thread's previous description. AQE submits query stages
+    * from its own threads, but they capture the submitting thread's local
+    * properties, so stage jobs carry the label too. Nested phases restore
+    * the enclosing label on exit. */
+  def withPhase[T](spark: SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val previous = sc.getLocalProperty(DescriptionKey)
+    sc.setLocalProperty(DescriptionKey, label)
+    try body
+    finally sc.setLocalProperty(DescriptionKey, previous)
+  }
 
   def attach(spark: SparkSession): QueryProfile = {
     val p = new QueryProfile(spark)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.QueryProfile.withPhase
 import graft.tables.LakeTable
 
 /** Transactional stage boundaries for composed curation pipelines — the
@@ -82,12 +83,14 @@ object CurationPipeline {
         // place when this run's survivor set is empty — and "table has no
         // snapshot" is how an empty stage is represented (below).
         purge(loc)
-        val out = st.compute(prev)
-        LakeTable.ensure(spark, loc, out.schema)
-          .write(out, "replace", properties = Map(
-            "curation.run_id" -> runId,
-            "curation.stage_seq" -> i.toString,
-            "curation.upstream" -> prevStamp))
+        withPhase(spark, s"curation: ${st.name}") {
+          val out = st.compute(prev)
+          LakeTable.ensure(spark, loc, out.schema)
+            .write(out, "replace", properties = Map(
+              "curation.run_id" -> runId,
+              "curation.stage_seq" -> i.toString,
+              "curation.upstream" -> prevStamp))
+        }
         LakeTable.load(spark, loc)
       }
       val meta = table.metadata

@@ -4,6 +4,8 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.QueryProfile.withPhase
+
 /** Distributed suffix-array construction by prefix doubling (Manber &
   * Myers 1990, the distributed formulation used for corpus-scale
   * exact-substring dedup — Lee et al. 2022 build exactly this over the
@@ -132,8 +134,8 @@ object SuffixArray {
       .select(col("doc_id"), (col("p0") + 1).cast("long").as("p"),
         col("key0").as("r1"), lit(-1L).as("r2"))
     val saDebug = sys.env.contains("SPARK_GRAFT_SA_DEBUG")
-    spark.sparkContext.setJobDescription("sa: round0 base rank")
-    var (cur, curRelease, active, _) = baseRank(initial, refineMode = false)
+    var (cur, curRelease, active, _) =
+      withPhase(spark, "sa: round0 base rank")(baseRank(initial, refineMode = false))
     if (saDebug) System.err.println(s"[sa] round0 active=$active")
     // narrow doc-length table for the broadcast pairing's end-of-doc probe
     val lens = d.select(col("doc_id"), length(col("text")).cast("long").as("len"))
@@ -158,41 +160,42 @@ object SuffixArray {
     // a caller forcing the walk path (broadcastPairLimit < 0) disables it.
     val localLimit = math.min(driverFoldLimit, broadcastPairLimit)
     while (k < maxLen && active > 0 && !stalled && active > localLimit) {
-      spark.sparkContext.setJobDescription(s"sa: round k=$k active=$active")
-      val small = active <= broadcastPairLimit
-      val paired =
-        if (small) pairedActiveBroadcast(cur, lens, k)
-        else pairedActiveWalk(cur, k)
-      // small active sets refine LAZILY with per-group local walks (zero
-      // extra jobs — the merged checkpoint below is the materialization,
-      // and accumulators carry the surviving-active and split counts out
-      // of it); large ones keep the sampled range partitioning, which can
-      // split a hot group across partitions via the r2 key.
-      val actAcc =
-        if (small) Some(spark.sparkContext.longAccumulator("sa_active")) else None
-      val splitAcc =
-        if (small) Some(spark.sparkContext.longAccumulator("sa_splits")) else None
-      val (upd, updRelease, updActive, updSplits) =
-        if (small) (refineLocal(paired, actAcc.get, splitAcc.get), () => (), -1L, -1L)
-        else baseRank(paired, refineMode = true)
-      // resolved rows keep their (final) base; refined actives replace.
-      val merged = cur.where(!col("act"))
-        .select("doc_id", "p", "base", "act")
-        .union(upd.select("doc_id", "p", "base", "act"))
-      val (next, nextRdd) = Dedup.checkpointOwned(merged) // eager
-      updRelease() // upd's checkpoint: consumed by the merged checkpoint
-      curRelease() // previous round's checkpoint: superseded
-      cur = next
-      curRelease = () => nextRdd.foreach(_.unpersist(blocking = false))
-      // the eager checkpoint above ran the refine walk, so the accumulators
-      // hold the surviving-active and split counts; a task RETRY can only
-      // INFLATE them, which at worst runs an extra (tiny) no-op round or
-      // skips the early exit — it can never corrupt ranks, end the loop
-      // early, or make a splitting round read as zero splits.
-      active = if (updActive >= 0) updActive else actAcc.get.value
-      stalled = (if (updSplits >= 0) updSplits else splitAcc.get.value) == 0
-      if (saDebug) System.err.println(s"[sa] round k=$k active=$active stalled=$stalled")
-      k *= 2
+      withPhase(spark, s"sa: round k=$k active=$active") {
+        val small = active <= broadcastPairLimit
+        val paired =
+          if (small) pairedActiveBroadcast(cur, lens, k)
+          else pairedActiveWalk(cur, k)
+        // small active sets refine LAZILY with per-group local walks (zero
+        // extra jobs — the merged checkpoint below is the materialization,
+        // and accumulators carry the surviving-active and split counts out
+        // of it); large ones keep the sampled range partitioning, which can
+        // split a hot group across partitions via the r2 key.
+        val actAcc =
+          if (small) Some(spark.sparkContext.longAccumulator("sa_active")) else None
+        val splitAcc =
+          if (small) Some(spark.sparkContext.longAccumulator("sa_splits")) else None
+        val (upd, updRelease, updActive, updSplits) =
+          if (small) (refineLocal(paired, actAcc.get, splitAcc.get), () => (), -1L, -1L)
+          else baseRank(paired, refineMode = true)
+        // resolved rows keep their (final) base; refined actives replace.
+        val merged = cur.where(!col("act"))
+          .select("doc_id", "p", "base", "act")
+          .union(upd.select("doc_id", "p", "base", "act"))
+        val (next, nextRdd) = Dedup.checkpointOwned(merged) // eager
+        updRelease() // upd's checkpoint: consumed by the merged checkpoint
+        curRelease() // previous round's checkpoint: superseded
+        cur = next
+        curRelease = () => nextRdd.foreach(_.unpersist(blocking = false))
+        // the eager checkpoint above ran the refine walk, so the accumulators
+        // hold the surviving-active and split counts; a task RETRY can only
+        // INFLATE them, which at worst runs an extra (tiny) no-op round or
+        // skips the early exit — it can never corrupt ranks, end the loop
+        // early, or make a splitting round read as zero splits.
+        active = if (updActive >= 0) updActive else actAcc.get.value
+        stalled = (if (updSplits >= 0) updSplits else splitAcc.get.value) == 0
+        if (saDebug) System.err.println(s"[sa] round k=$k active=$active stalled=$stalled")
+        k *= 2
+      }
     }
 
     // Driver-local tail (see [[DriverFoldLimit]]): the surviving active
@@ -204,10 +207,12 @@ object SuffixArray {
     // resolved rows with the locally-finished actives.
     if (k < maxLen && active > 0 && !stalled && active <= localLimit) {
       import spark.implicits._
-      spark.sparkContext.setJobDescription(s"sa: local tail collect active=$active")
-      val aRows = cur.where(col("act"))
-        .select(col("doc_id"), col("p"), col("base"))
-        .as[(Long, Long, Long)].collect()
+      val collectPhase = s"sa: local tail collect active=$active"
+      val aRows = withPhase(spark, collectPhase) {
+        cur.where(col("act"))
+          .select(col("doc_id"), col("p"), col("base"))
+          .as[(Long, Long, Long)].collect()
+      }
       val n = aRows.length
       val aDoc = new Array[Long](n)
       val aP = new Array[Long](n)
@@ -250,9 +255,10 @@ object SuffixArray {
         -1
       }
       // doc lengths for the active docs only (bounded by |active set|)
-      val lenMap = lens
-        .join(broadcast(aDoc.distinct.toSeq.toDF("doc_id")), "doc_id")
-        .as[(Long, Long)].collect().toMap
+      val lenMap = withPhase(spark, collectPhase) {
+        lens.join(broadcast(aDoc.distinct.toSeq.toDF("doc_id")), "doc_id")
+          .as[(Long, Long)].collect().toMap
+      }
       var activeIdx = Array.range(0, n)
       // Prefetch-fold (r15, guide §1.2 — fewer corpus passes): once the
       // walk's FUTURE probe set fits [[PrefetchLimit]], ONE corpus-frame
@@ -297,13 +303,12 @@ object SuffixArray {
             if (!probes.isEmpty) {
               import scala.jdk.CollectionConverters._
               val probeRows = probes.asScala.toSeq
-              spark.sparkContext.setJobDescription(
-                s"sa: local tail prefetch k=$k probes=${probeRows.size}")
-              cur.join(broadcast(probeRows.toDF("fd", "fp")),
-                  col("doc_id") === col("fd") && col("p") === col("fp"))
-                .select(col("doc_id"), col("p"), col("base"))
-                .as[(Long, Long, Long)].collect()
-                .foreach(t => prefetched.put((t._1, t._2), t._3))
+              withPhase(spark, s"sa: local tail prefetch k=$k probes=${probeRows.size}") {
+                cur.join(broadcast(probeRows.toDF("fd", "fp")),
+                    col("doc_id") === col("fd") && col("p") === col("fp"))
+                  .select(col("doc_id"), col("p"), col("base"))
+                  .as[(Long, Long, Long)].collect()
+              }.foreach(t => prefetched.put((t._1, t._2), t._3))
             }
           }
         }
@@ -326,14 +331,12 @@ object SuffixArray {
         }
         val needRows = need.result()
         if (needRows.nonEmpty) {
-          spark.sparkContext.setJobDescription(
-            s"sa: local tail fetch k=$k need=${needRows.size}")
-          val fetched = cur
-            .join(broadcast(needRows.toDF("fd", "fp")),
-              col("doc_id") === col("fd") && col("p") === col("fp"))
-            .select(col("doc_id"), col("p"), col("base"))
-            .as[(Long, Long, Long)].collect()
-            .map(t => (t._1, t._2) -> t._3).toMap
+          val fetched = withPhase(spark, s"sa: local tail fetch k=$k need=${needRows.size}") {
+            cur.join(broadcast(needRows.toDF("fd", "fp")),
+                col("doc_id") === col("fd") && col("p") === col("fp"))
+              .select(col("doc_id"), col("p"), col("base"))
+              .as[(Long, Long, Long)].collect()
+          }.map(t => (t._1, t._2) -> t._3).toMap
           for (idx <- activeIdx; if r2(idx) == Long.MinValue)
             r2(idx) = fetched((aDoc(idx), aP(idx) + k))
         }
@@ -400,10 +403,10 @@ object SuffixArray {
     // densify: suffix_rank = 1-based dense rank of base. base order ==
     // suffix order with ties exactly on equal groups, so this is a pure
     // representation change, verified by the oracle's raw suffix sort.
-    spark.sparkContext.setJobDescription("sa: densify")
-    val (out, _, _) = denseRank(
-      cur.select(col("doc_id"), col("p"), col("base").as("r1"),
+    val (out, _, _) = withPhase(spark, "sa: densify") {
+      denseRank(cur.select(col("doc_id"), col("p"), col("base").as("r1"),
         lit(-1L).as("r2")))
+    }
     curRelease() // the dense result is checkpointed; the base frame is dead
     out
   }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.QueryProfile.withPhase
 import graft.tables.{LakeCatalog, LakeTable, PartitionField, SortField}
 
 /** Resource write properties (`elt-common/src/elt_common/extract.py:63-87`):
@@ -76,73 +77,75 @@ object IngestRunner {
         .map(parseStateWatermarks).getOrElse(Map.empty)
 
     resources.foreach { res =>
-      val location = catalog.tableLocation(warehouse, namespace, res.name)
-      var writeMode = res.writeProperties.writeMode
+      withPhase(spark, s"ingest: ${res.name}") {
+        val location = catalog.tableLocation(warehouse, namespace, res.name)
+        var writeMode = res.writeProperties.writeMode
 
-      val schemaBefore: Option[String] =
-        if (LakeTable.exists(location))
-          Some(LakeTable.load(spark, location).metadata.schema.json)
-        else None
-      val storedWatermark: Option[Watermark] = {
-        val fromTable =
+        val schemaBefore: Option[String] =
           if (LakeTable.exists(location))
-            LakeTable.load(spark, location).metadata.properties.get(PropertyWatermark)
-              .map(Watermark.deserialize)
+            Some(LakeTable.load(spark, location).metadata.schema.json)
           else None
-        fromTable.orElse(
-          stateWatermarks.get(res.name).map(Watermark.deserialize))
-      }
+        val storedWatermark: Option[Watermark] = {
+          val fromTable =
+            if (LakeTable.exists(location))
+              LakeTable.load(spark, location).metadata.properties.get(PropertyWatermark)
+                .map(Watermark.deserialize)
+            else None
+          fromTable.orElse(
+            stateWatermarks.get(res.name).map(Watermark.deserialize))
+        }
 
-      val watermarks = scala.collection.mutable.ListBuffer.empty[Watermark]
-      res.extractor(storedWatermark).foreach { chunk0 =>
-        // 'replace' deletes contents once: first chunk replaces, the rest
-        // append (`runner.py:79-84`).
-        if (writeMode == "replace" && rowsSeen(res.name) > 0) writeMode = "append"
+        val watermarks = scala.collection.mutable.ListBuffer.empty[Watermark]
+        res.extractor(storedWatermark).foreach { chunk0 =>
+          // 'replace' deletes contents once: first chunk replaces, the rest
+          // append (`runner.py:79-84`).
+          if (writeMode == "replace" && rowsSeen(res.name) > 0) writeMode = "append"
 
-        val stamped = if (res.dltColumns) addDltColumns(chunk0, loadId) else chunk0
-        // Single evaluation of the extractor plan per chunk: cache the
-        // chunk, then ONE job computes row count + max watermark together;
-        // the write re-reads the cache, not the source.
-        val chunk = stamped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val aggs = count(lit(1)).as("__rows") +:
-            res.watermarkColumn.map(c => max(col(c)).as("__wm")).toSeq
-          val stats = chunk.agg(aggs.head, aggs.tail: _*).head()
-          val rows = stats.getLong(0)
-          if (rows > 0) { // L4: zero-row chunks never even create the table
-            val watermark = res.watermarkColumn.flatMap { c =>
-              if (stats.isNullAt(1)) None
-              else Some(toWatermark(c, stats.get(1), chunk.schema(c).dataType))
+          val stamped = if (res.dltColumns) addDltColumns(chunk0, loadId) else chunk0
+          // Single evaluation of the extractor plan per chunk: cache the
+          // chunk, then ONE job computes row count + max watermark together;
+          // the write re-reads the cache, not the source.
+          val chunk = stamped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          try {
+            val aggs = count(lit(1)).as("__rows") +:
+              res.watermarkColumn.map(c => max(col(c)).as("__wm")).toSeq
+            val stats = chunk.agg(aggs.head, aggs.tail: _*).head()
+            val rows = stats.getLong(0)
+            if (rows > 0) { // L4: zero-row chunks never even create the table
+              val watermark = res.watermarkColumn.flatMap { c =>
+                if (stats.isNullAt(1)) None
+                else Some(toWatermark(c, stats.get(1), chunk.schema(c).dataType))
+              }
+              watermark.foreach(watermarks += _)
+
+              val table = LakeTable.ensure(spark, location, chunk.schema,
+                res.writeProperties.partition, res.writeProperties.sortOrder,
+                identifierFields = res.writeProperties.mergeOn)
+              table.write(chunk, writeMode, res.writeProperties.mergeOn,
+                ingestProperties(watermark))
+              rowsSeen(res.name) += rows
             }
-            watermark.foreach(watermarks += _)
+          } finally chunk.unpersist()
+        }
 
-            val table = LakeTable.ensure(spark, location, chunk.schema,
-              res.writeProperties.partition, res.writeProperties.sortOrder,
-              identifierFields = res.writeProperties.mergeOn)
-            table.write(chunk, writeMode, res.writeProperties.mergeOn,
-              ingestProperties(watermark))
-            rowsSeen(res.name) += rows
-          }
-        } finally chunk.unpersist()
-      }
+        // Out-of-order watermark repair (`runner.py:100-107`).
+        if (watermarks.nonEmpty) {
+          val maxWm = watermarks.maxBy(identity[Watermark])(Ordering.fromLessThan(
+            (a, b) => a.value.compareTo(b.value) < 0))
+          if (maxWm != watermarks.last)
+            LakeTable.load(spark, location)
+              .writeProperties(ingestProperties(Some(maxWm)))
+          finalWatermarks(res.name) = maxWm.serialize
+        }
 
-      // Out-of-order watermark repair (`runner.py:100-107`).
-      if (watermarks.nonEmpty) {
-        val maxWm = watermarks.maxBy(identity[Watermark])(Ordering.fromLessThan(
-          (a, b) => a.value.compareTo(b.value) < 0))
-        if (maxWm != watermarks.last)
-          LakeTable.load(spark, location)
-            .writeProperties(ingestProperties(Some(maxWm)))
-        finalWatermarks(res.name) = maxWm.serialize
-      }
-
-      // L8 feed: a created or add-only-evolved schema becomes a
-      // `_dlt_version` row (reference `pyiceberg.py:116-139`).
-      if (rowsSeen(res.name) > 0) {
-        val after = LakeTable.load(spark, location)
-        val afterJson = after.metadata.schema.json
-        if (!schemaBefore.contains(afterJson))
-          schemaEvents += ((res.name, after.version, afterJson))
+        // L8 feed: a created or add-only-evolved schema becomes a
+        // `_dlt_version` row (reference `pyiceberg.py:116-139`).
+        if (rowsSeen(res.name) > 0) {
+          val after = LakeTable.load(spark, location)
+          val afterJson = after.metadata.schema.json
+          if (!schemaBefore.contains(afterJson))
+            schemaEvents += ((res.name, after.version, afterJson))
+        }
       }
     }
 

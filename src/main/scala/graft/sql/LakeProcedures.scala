@@ -46,13 +46,15 @@ object LakeProcedures {
       ProcedureParameter.in(n, IntegerType).defaultValue(dflt).build()
     name match {
       case "compact" => p(Seq(table, intArg("target_files", "1"))) { (t, in) =>
-        t.compact(in.getInt(1)); s"compacted to <= ${in.getInt(1)} file(s)"
+        val n = t.compact(in.getInt(1))
+        if (n == 0) "nothing to compact"
+        else s"compacted $n partition(s) to <= ${in.getInt(1)} file(s) each"
       }
       case "compact_small_files" => p(Seq(table,
         ProcedureParameter.in("min_file_size_bytes", LongType).build(),
         intArg("target_files", "1"))) { (t, in) =>
-        t.compactSmallFiles(in.getLong(1), in.getInt(2))
-        s"bin-packed files under ${in.getLong(1)} bytes"
+        val n = t.compactSmallFiles(in.getLong(1), in.getInt(2))
+        s"bin-packed $n file(s) under ${in.getLong(1)} bytes"
       }
       case "expire_snapshots" => p(Seq(table,
         ProcedureParameter.in("retention", StringType)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.QueryProfile.withPhase
 import graft.tables.LakeTable
 
 /** Structured-Streaming ingest (SURVEY §2.9): the reference is batch
@@ -46,17 +47,9 @@ object StreamingIngest {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // An empty batch must not create the table, so the drain probes
-        // emptiness before `ensure`; the table layer has no probe of its
-        // own and decides skip-empty after its write. Persisted so a heavy
-        // batchTransform (the streaming dedup gate runs a full LSH probe)
-        // is computed once.
-        val out = batchTransform(batch).persist()
-        try {
-          if (!out.isEmpty)
-            LakeTable.ensure(batch.sparkSession, tableLocation, out.schema,
-              identifierFields = mergeOn).write(out, writeMode, mergeOn)
-        } finally out.unpersist()
+        withPhase(batch.sparkSession, s"drain: $tableLocation") {
+          writeBatch(batchTransform(batch), tableLocation, writeMode, mergeOn)
+        }
       }
       .start()
     query.awaitTermination()
@@ -83,12 +76,31 @@ object StreamingIngest {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          LakeTable.ensure(batch.sparkSession, targetLocation, batch.schema,
-            identifierFields = mergeOn).write(batch, "merge", mergeOn)
+        withPhase(batch.sparkSession, s"drain: $targetLocation") {
+          writeBatch(batch, targetLocation, "merge", mergeOn)
+        }
       }
       .start()
     query.awaitTermination()
+  }
+
+  /** One micro-batch into the lake table. An empty batch must not create
+    * the table, so while the table does not exist emptiness is probed (one
+    * Spark job) over the persisted batch, which the write then reuses (a
+    * heavy batchTransform, such as the streaming dedup gate's LSH probe, is
+    * computed once). Into an existing table the write is the batch's only
+    * reader and skips an empty batch after the fact, with no probe. */
+  private def writeBatch(batch: DataFrame, location: String, writeMode: String,
+                         mergeOn: Seq[String]): Unit = {
+    def write(df: DataFrame): Unit =
+      LakeTable.ensure(df.sparkSession, location, df.schema,
+        identifierFields = mergeOn).write(df, writeMode, mergeOn)
+    if (LakeTable.exists(location)) write(batch)
+    else {
+      val probed = batch.persist()
+      try if (!probed.isEmpty) write(probed)
+      finally probed.unpersist()
+    }
   }
 
   /** Watermarked tumbling-window aggregation over an event stream — the

@@ -289,10 +289,10 @@ final class LakeTable private (spark: SparkSession, val location: String) {
     * alias, and every read COALESCEs the new physical column (files
     * written after the rename) with the old one (files written before) —
     * parquet null-fills whichever a given file lacks, so the per-file
-    * resolution is exact. Old files stay readable forever; compaction
-    * rewrites them under the new name. Renaming a partition-source, sort,
-    * or identifier column is rejected (their names are baked into
-    * directory layouts and manifests). */
+    * resolution is exact. Old files stay readable forever; a compaction
+    * that rewrites one writes it under the new name. Renaming a
+    * partition-source, sort, or identifier column is rejected (their names
+    * are baked into directory layouts and manifests). */
   def renameColumn(oldName: String, newName: String): Unit = commitRetry { meta =>
     require(meta.schema.fieldNames.exists(_.equalsIgnoreCase(oldName)),
       s"No such column: '$oldName'")
@@ -454,7 +454,8 @@ final class LakeTable private (spark: SparkSession, val location: String) {
     * read every target row's match state, so they rewrite the whole table
     * (the SQL shape itself is O(table); there is nothing to prune).
     *
-    * With no touched file (an empty table, an empty source, or keys
+    * An empty source ends the merge after the bounds job, committing
+    * only its properties. With no touched file (an empty table, or keys
     * outside every file's bounds) no target row can change, so the
     * source's inserts are written with no join; an empty table also skips
     * the bounds job. Without matched or by-source clauses the inserts
@@ -487,14 +488,17 @@ final class LakeTable private (spark: SparkSession, val location: String) {
         if (!prune) (files, Seq.empty[DataFile])
         else {
           val (rows, bounds) = sourceKeyBounds(source, meta.schema, keys)
-          if (rows == 0) (Nil, files)
-          else {
-            val zone = spark.sessionState.conf.sessionLocalTimeZone
-            val (bt, bc) = files.partition(f => FileStats.touches(
-              FileStats.withPartitionStats(f, meta, zone), bounds))
-            val (tt, kc) = transformKeysetSplit(source, meta, keys, bt)
-            (tt, bc ++ kc)
+          if (rows == 0) {
+            // an empty source changes no row: end here, committing only
+            // the properties, as skip-empty does for an empty write
+            if (properties.nonEmpty) writeProperties(properties)
+            return
           }
+          val zone = spark.sessionState.conf.sessionLocalTimeZone
+          val (bt, bc) = files.partition(f => FileStats.touches(
+            FileStats.withPartitionStats(f, meta, zone), bounds))
+          val (tt, kc) = transformKeysetSplit(source, meta, keys, bt)
+          (tt, bc ++ kc)
         }
       if (touched.isEmpty && notMatched.isEmpty) return
       val insertOnly = touched.isEmpty || (matched.isEmpty && notMatchedBySource.isEmpty)
@@ -1092,43 +1096,59 @@ final class LakeTable private (spark: SparkSession, val location: String) {
 
   // ---- maintenance (R9) ---------------------------------------------
 
-  /** Rewrite the table into ~targetFiles files per partition dir (small-file
-    * compaction; Trino `ALTER TABLE EXECUTE optimize` equivalent). */
-  def compact(targetFiles: Int = 1): Unit = {
+  /** Small-file compaction (Trino `ALTER TABLE EXECUTE optimize`
+    * equivalent): rewrite each partition that holds more than
+    * `max(1, targetFiles)` files into ~targetFiles files, and carry every
+    * other file into the new snapshot verbatim. A partition already at
+    * its target is not rewritten, so a table whose partitions each hold
+    * one file commits nothing: maintenance on a table that every load
+    * replaces or merges into one file costs no copy of it. Returns the
+    * number of partitions rewritten (0: no commit). */
+  def compact(targetFiles: Int = 1): Int =
+    rewriteCrowded(targetFiles)(_ => true).size
+
+  /** Incremental compaction: bin-pack only files SMALLER than
+    * `minFileSizeBytes`, in each partition holding more than
+    * `max(1, targetFiles)` of them, and carry every other file into the
+    * new snapshot verbatim — Iceberg's
+    * `rewrite_data_files(file_size_threshold)` cost model. On a 100 TB
+    * table accumulating small incremental commits this is O(small files)
+    * per run, where full `compact()` is O(table). Files with unknown size
+    * (legacy manifests) count as small. Returns the number of files
+    * rewritten (0: no commit). */
+  def compactSmallFiles(minFileSizeBytes: Long,
+                        targetFiles: Int = 1): Int =
+    rewriteCrowded(targetFiles)(f =>
+      f.sizeBytes < 0 || f.sizeBytes < minFileSizeBytes).map(_.size).sum
+
+  /** The one compaction commit. The `candidate` files of each partition
+    * holding more than `max(1, targetFiles)` of them are coalesced into
+    * ~targetFiles files; every other file is carried verbatim (manifest
+    * entry, bounds and all), and when no partition qualifies nothing is
+    * committed. A carried file keeps its physical schema; reads resolve
+    * renamed and dropped columns through the name mapping, as for any
+    * uncompacted file. preEvolved: an internal rewrite of existing data
+    * never re-validates schema compatibility (parquet reads relax
+    * nullability). Returns the rewritten partitions' files. */
+  private def rewriteCrowded(targetFiles: Int)(
+      candidate: DataFile => Boolean): Seq[Seq[DataFile]] = {
     // capture (base, meta) FIRST: the data plan and the CAS base must
     // come from the same version, or a commit landing in between would
     // be silently dropped by the rewrite
     val (base, meta) = metadataAt
-    // no live data: nothing to rewrite, so no (empty) compact commit
-    if (meta.currentSnapshot.forall(_.files.isEmpty)) return
-    val current = readWithPartitions(meta, None)
-      .select(meta.schema.fieldNames.map(col).toIndexedSeq: _*)
-    // preEvolved: an internal rewrite of existing data never re-validates
-    // schema compatibility (parquet reads relax nullability).
-    commitData(current.coalesce(math.max(1, targetFiles)), "compact",
-      keepExisting = false, Map.empty, preEvolved = Some((base, meta)))
-  }
-
-  /** Incremental compaction: bin-pack only files SMALLER than
-    * `minFileSizeBytes` into ~targetFiles replacements and carry every
-    * already-well-sized file into the new snapshot verbatim — Iceberg's
-    * `rewrite_data_files(file_size_threshold)` cost model. On a 100 TB
-    * table accumulating small incremental commits this is O(small files)
-    * per run, where full `compact()` is O(table). Files with unknown size
-    * (legacy manifests) count as small. No-op (no commit) when nothing
-    * qualifies or the small set is already a single file. */
-  def compactSmallFiles(minFileSizeBytes: Long,
-                        targetFiles: Int = 1): Unit = {
-    val (base, meta) = metadataAt
     val files = meta.currentSnapshot.map(_.files).getOrElse(Nil)
-    val (small, big) = files.partition(f =>
-      f.sizeBytes < 0 || f.sizeBytes < minFileSizeBytes)
-    if (small.size <= math.max(1, targetFiles)) return
-    val smallData = readWithPartitions(meta, Some(small))
-      .select(meta.schema.fieldNames.map(col).toIndexedSeq: _*)
-    commitData(smallData.coalesce(math.max(1, targetFiles)), "compact",
-      keepExisting = false, Map.empty, preEvolved = Some((base, meta)),
-      carryFiles = big)
+    val crowded = files.filter(candidate).groupBy(_.partitionValues).values
+      .filter(_.size > math.max(1, targetFiles)).toSeq
+    if (crowded.nonEmpty) {
+      val rewrite = crowded.flatten.map(_.path).toSet
+      val (packed, carried) = files.partition(f => rewrite(f.path))
+      val rows = readWithPartitions(meta, Some(packed))
+        .select(meta.schema.fieldNames.map(col).toIndexedSeq: _*)
+      commitData(rows.coalesce(math.max(1, targetFiles)), "compact",
+        keepExisting = false, Map.empty, preEvolved = Some((base, meta)),
+        carryFiles = carried)
+    }
+    crowded
   }
 
   /** Z-order rewrite: cluster the table by the interleaved bit pattern of

@@ -2,6 +2,8 @@ package graft.tables
 
 import org.apache.spark.sql.SparkSession
 
+import graft.QueryProfile.withPhase
+
 /** Maintenance driver (R9): per-table compaction, snapshot expiry, and
   * orphan-file GC with the reference's validation and error isolation
   * (`elt-common/src/elt_common/iceberg/maintenance/__init__.py:28-101`):
@@ -38,21 +40,24 @@ object Maintenance {
     val targets =
       if (tables.nonEmpty) tables else catalog.listTables(warehouse, namespace)
     targets.map { t =>
-      try {
-        val table = catalog.loadTable(spark, warehouse, namespace, t)
-        // incremental bin-pack (O(small files)) when a threshold is given;
-        // full rewrite otherwise (the reference's `optimize`)
-        smallFileThresholdBytes match {
-          case Some(th) => table.compactSmallFiles(th)
-          case None => table.compact()
+      withPhase(spark, s"maintenance: $t") {
+        try {
+          val table = catalog.loadTable(spark, warehouse, namespace, t)
+          // incremental bin-pack (O(small files)) when a threshold is given;
+          // otherwise the reference's `optimize`, over crowded partitions only
+          val (n, rewritten) = smallFileThresholdBytes match {
+            case Some(th) => (table.compactSmallFiles(th), "small file(s)")
+            case None => (table.compact(), "partition(s)")
+          }
+          table.expireSnapshots(retentionMs)
+          val orphans = table.removeOrphanFiles()
+          val trimmed = table.expireMetadataVersions()
+          val compacted = if (n == 0) "nothing to compact" else s"compacted $n $rewritten"
+          Result(t, ok = true, s"$compacted; ${orphans.size} orphan files removed; " +
+            s"${trimmed.size} metadata versions trimmed")
+        } catch {
+          case e: Exception => Result(t, ok = false, e.toString)
         }
-        table.expireSnapshots(retentionMs)
-        val orphans = table.removeOrphanFiles()
-        val trimmed = table.expireMetadataVersions()
-        Result(t, ok = true, s"compacted; ${orphans.size} orphan files removed; " +
-          s"${trimmed.size} metadata versions trimmed")
-      } catch {
-        case e: Exception => Result(t, ok = false, e.toString)
       }
     }
   }

@@ -11,7 +11,8 @@ import graft.{Bench, GraftSession, QueryProfile, SparkEntry}
   * noop-sink run is timed under [[QueryProfile]], as Bench times it. Prints
   * the run's jobs ("@" is the start offset from the run's start, so the
   * space between one job's end and the next's start is driver time), its
-  * stages by spill (stage names carry the job description or call site),
+  * stages by spill (each with its phase in brackets, the description of
+  * the job that ran it, then its call-site name),
   * the totals and the AQE-final executed plan. Given a plan directory, it
   * also writes `explain("formatted")` of the query, the pre-execution plan,
   * to `<planDir>/<q>_<suffix>.txt`: the `plans/rN` evidence.
@@ -51,7 +52,7 @@ object Profile {
         f"${(j.endMs - j.startMs) / 1e3}%6.2fs  ${j.description}"))
       run.stages.sortBy(s => (-s.spillBytes, s.id)).take(25).foreach(s => println(
         f"stage ${s.id}%4d spillMB=${mb(s.spillBytes)}%9.1f shWriteMB=${mb(s.shuffleWriteBytes)}%8.1f " +
-          f"shReadMB=${mb(s.shuffleReadBytes)}%8.1f tasks=${s.tasks}%4d ${s.name.take(120)}"))
+          f"shReadMB=${mb(s.shuffleReadBytes)}%8.1f tasks=${s.tasks}%4d [${s.phase}] ${s.name.take(120)}"))
       println(f"[profile] $q wall ${run.wallS}%.2fs, ${run.jobs.size} jobs, ${run.stages.size} stages, " +
         f"task ${run.taskS}%.2fs, driver gap ${run.driverGapS}%.2fs, shuffle ${mb(run.shuffleBytes)}%.2f MB, " +
         f"spill ${mb(run.spillBytes)}%.2f MB, ${run.exchanges} Exchange, ${run.reusedExchanges} ReusedExchange")

@@ -2,6 +2,7 @@ package graft.transform
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.QueryProfile.withPhase
 import graft.tables.{LakeCatalog, PartitionField, SortField}
 
 /** dbt-style model DAG (Q28/Q29): each model is a function of its resolved
@@ -97,7 +98,7 @@ final class ModelGraph(models: Seq[Model]) {
       val m = byName(name)
       if (sources.contains(name)) {
         built(name) = sources(name) // fixture splice
-      } else {
+      } else withPhase(spark, s"model: $name") {
       m.deps.foreach(resolve) // fail fast on missing inputs
       val result = (m.materialized, catalog) match {
         case ("incremental", Some((cat, wh, ns))) =>

@@ -35,4 +35,53 @@ class QueryProfileSpec extends AnyFunSuite with SparkSpec {
     val plan = java.nio.file.Paths.get(planDir, "d33_bm25_topk_t.txt")
     assert(java.nio.file.Files.readString(plan).startsWith("== Physical Plan =="))
   }
+
+  private val Description = "spark.job.description"
+
+  test("withPhase labels every job of its body, AQE stage jobs included, and restores") {
+    import org.apache.spark.sql.functions.col
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val profile = QueryProfile.attach(spark)
+      val run = try profile.record {
+        QueryProfile.withPhase(spark, "phase: outer") {
+          // a shuffle (an AQE query-stage job) and a broadcast join
+          spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).count()
+            .join(spark.range(0, 7).withColumnRenamed("id", "k"), "k").collect()
+          QueryProfile.withPhase(spark, "phase: inner")(spark.range(0, 10).collect())
+          assert(sc.getLocalProperty(Description) == "phase: outer")
+          spark.range(0, 10).count()
+        }
+      } finally profile.detach()
+      val phases = run.jobs.map(_.description)
+      assert(phases.size >= 4, run.jobs)
+      assert(phases.count(_ == "phase: inner") == 1, phases)
+      assert(phases.filterNot(_ == "phase: inner").forall(_ == "phase: outer"), phases)
+      assert(run.stages.nonEmpty && run.stages.forall(_.phase.startsWith("phase: ")))
+      assert(sc.getLocalProperty(Description) == "caller")
+      // restored when the body throws, too
+      intercept[IllegalStateException](QueryProfile.withPhase(spark, "phase: failing") {
+        throw new IllegalStateException("boom")
+      })
+      assert(sc.getLocalProperty(Description) == "caller")
+    } finally sc.setJobDescription(null)
+    assert(sc.getLocalProperty(Description) == null)
+  }
+
+  test("SuffixArray labels its phases and leaves the caller's description as it found it") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val profile = QueryProfile.attach(spark)
+      val run = try profile.record {
+        operators.SuffixArray.suffixRanks(
+          Seq((1L, "banana bandana"), (2L, "bandanas")).toDF("doc_id", "text"),
+          "doc_id", "text").collect()
+      } finally profile.detach()
+      assert(run.jobs.exists(_.description == "sa: densify"), run.jobs)
+      assert(sc.getLocalProperty(Description) == "caller")
+    } finally sc.setJobDescription(null)
+  }
 }

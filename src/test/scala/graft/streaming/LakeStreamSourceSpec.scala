@@ -126,4 +126,24 @@ class LakeStreamSourceSpec extends AnyFunSuite with SparkSpec {
       assert(spark.table("lss_sink5").count() == 1)
     } finally q.stop()
   }
+
+  test("a drain into an existing table runs no emptiness probe") {
+    val bronze = tmpDir("lss_probe") + "/bronze"
+    val silver = tmpDir("lss_probe2") + "/silver"
+    val ckpt = tmpDir("lss_probe_ck")
+    val b = LakeTable.ensure(spark, bronze, Seq((1L, "a")).toDF("id", "name").schema)
+    b.write(Seq((1L, "a"), (2L, "b")).toDF("id", "name"), "append")
+    def hop(): Unit =
+      StreamingIngest.drainTableToTable(spark, bronze, silver, ckpt, mergeOn = Seq("id"))
+    hop() // creates silver: the probe decides creation
+    b.write(Seq((2L, "B"), (3L, "c")).toDF("id", "name"), "append")
+    val profile = graft.QueryProfile.attach(spark)
+    val run = try profile.record(hop()) finally profile.detach()
+    // the merge's jobs, measured on the 4-core suite session; an isEmpty
+    // probe ahead of the merge made it 8
+    assert(run.jobs.size == 7, run.jobs)
+    assert(run.jobs.forall(_.description == s"drain: $silver"), run.jobs)
+    assert(LakeTable.load(spark, silver).read().as[(Long, String)].collect().sorted.toSeq ==
+      Seq((1L, "a"), (2L, "B"), (3L, "c")))
+  }
 }

@@ -912,4 +912,101 @@ class LakeTableSpec extends AnyFunSuite with SparkSpec {
     t.compactSmallFiles(threshold)
     assert(t.metadata.currentSnapshotId == snapBefore)
   }
+
+  test("compactSmallFiles packs per partition: one small file per partition stays") {
+    val loc = tmpDir("lt_compact_small_parts")
+    def batch(cats: Seq[String]) = cats.flatMap(c => (1 to 10).map(i =>
+      (s"$c-$i".hashCode.toLong, c))).toDF("id", "cat")
+    val t = LakeTable.ensure(spark, loc, batch(Seq("a")).schema,
+      partitionSpec = Seq(PartitionField("cat", "identity")))
+    t.write(batch(Seq("a", "b", "c")).coalesce(1), "append") // one small file each
+    val version = t.version
+    assert(t.compactSmallFiles(Long.MaxValue) == 0 && t.version == version)
+    t.write(batch(Seq("a")).coalesce(1), "append") // "a" now holds two
+    val before = t.metadata.currentSnapshot.get.files
+    def inCat(c: String, fs: Seq[DataFile]) =
+      fs.filter(_.partitionValues.get("cat").flatten.contains(c))
+    assert(t.compactSmallFiles(Long.MaxValue) == 2)
+    val after = t.metadata.currentSnapshot.get.files
+    assert(inCat("a", after).size == 1)
+    for (c <- Seq("b", "c")) assert(inCat(c, after) == inCat(c, before))
+    assert(t.read().count() == 40)
+  }
+
+  test("compact leaves a one-file unpartitioned table uncommitted") {
+    val loc = tmpDir("lt_compact_one")
+    val t = LakeTable.ensure(spark, loc, Seq((1L, "a")).toDF("id", "name").schema)
+    t.write((1L to 50L).map(i => (i, s"n$i")).toDF("id", "name").coalesce(1), "replace")
+    val (version, snapshot) = (t.version, t.metadata.currentSnapshot)
+    assert(snapshot.get.files.size == 1)
+    assert(t.compact() == 0)
+    assert(t.version == version && t.metadata.currentSnapshot == snapshot)
+  }
+
+  test("compact rewrites only the partitions holding more files than the target") {
+    val loc = tmpDir("lt_compact_parts")
+    def batch(cats: Seq[String], n: Int) = cats.flatMap(c => (1 to n).map(i =>
+      (s"$c-$i".hashCode.toLong, c, s"v$i"))).toDF("id", "cat", "name")
+    val t = LakeTable.ensure(spark, loc, batch(Seq("a"), 1).schema,
+      partitionSpec = Seq(PartitionField("cat", "identity")))
+    t.write(batch(Seq("a", "b", "c"), 20).coalesce(1), "append") // one file each
+    t.write(batch(Seq("a"), 20).coalesce(1), "append")           // "a" gets two
+    t.write(batch(Seq("a"), 20).coalesce(1), "append")           // and three
+    val before = t.metadata.currentSnapshot.get.files
+    def inCat(c: String, fs: Seq[DataFile]) =
+      fs.filter(_.partitionValues.get("cat").flatten.contains(c))
+    assert(inCat("a", before).size == 3 && inCat("b", before).size == 1)
+    val rows = t.read().collect().toSet
+    def filesRead(c: String) = {
+      val df = t.readWithPartitions().filter(col("cat") === c)
+      df.collect()
+      scanOf(df).metrics("numFiles").value
+    }
+    assert(filesRead("b") == 1)
+
+    assert(t.compact() == 1)
+    val after = t.metadata.currentSnapshot.get.files
+    assert(t.metadata.currentSnapshot.get.operation == "compact")
+    assert(inCat("a", after).size == 1)
+    assert(inCat("a", after).head.path != inCat("a", before).head.path)
+    // the one-file partitions carry over with their manifest entries
+    for (c <- Seq("b", "c")) assert(inCat(c, after) == inCat(c, before))
+    assert(t.read().collect().toSet == rows && t.read().count() == 100)
+    assert(filesRead("b") == 1 && filesRead("a") == 1)
+    // nothing left to rewrite: no commit
+    val version = t.version
+    assert(t.compact() == 0 && t.version == version)
+  }
+
+  test("compact(targetFiles = 2) leaves a two-file partition alone") {
+    val loc = tmpDir("lt_compact_target")
+    def batch(ids: Range) = ids.map(i => (i.toLong, s"n$i")).toDF("id", "name")
+    val t = LakeTable.ensure(spark, loc, batch(1 to 2).schema)
+    t.write(batch(1 to 10).coalesce(1), "append")
+    t.write(batch(11 to 20).coalesce(1), "append")
+    val version = t.version
+    assert(t.compact(targetFiles = 2) == 0)
+    assert(t.version == version && t.metadata.currentSnapshot.get.files.size == 2)
+    t.write(batch(21 to 30).coalesce(1), "append")
+    assert(t.compact(targetFiles = 2) == 1)
+    assert(t.metadata.currentSnapshot.get.files.size <= 2 && t.read().count() == 30)
+  }
+
+  test("an empty-source upsert into a non-empty table runs only the bounds job") {
+    val loc = tmpDir("lt_empty_upsert")
+    val t = LakeTable.ensure(spark, loc, Seq((1L, "a")).toDF("id", "name").schema)
+    t.write(Seq((1L, "a"), (2L, "b")).toDF("id", "name"), "append")
+    val snapshot = t.metadata.currentSnapshot
+    val empty = Seq((3L, "c")).toDF("id", "name").filter(col("id") < 0)
+    val profile = graft.QueryProfile.attach(spark)
+    val run = try profile.record {
+      t.write(empty, "merge", Seq("id"), properties = Map("stamp" -> "1"))
+    } finally profile.detach()
+    // one query: the bounds aggregation's shuffle-map stage and its result
+    // (a zero-row write job after it made 3)
+    assert(run.jobs.size == 2, run.jobs)
+    assert(t.metadata.currentSnapshot == snapshot)
+    assert(t.metadata.properties.get("stamp").contains("1"))
+    assert(names(loc) == Seq("a", "b"))
+  }
 }

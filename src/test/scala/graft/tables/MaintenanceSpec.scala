@@ -66,4 +66,35 @@ class MaintenanceSpec extends AnyFunSuite with SparkSpec {
     }
     assert(created.metadata.snapshots.isEmpty && emptied.metadata.snapshots.isEmpty)
   }
+
+  test("runAll rewrites nothing in a one-file table") {
+    val catalog = new LakeCatalog(tmpDir("maint_one_wh"))
+    val df = (1L to 20L).map(i => (i, s"n$i")).toDF("id", "name").coalesce(1)
+    val t = catalog.ensureTable(spark, "w", "n", "t", df.schema)
+    t.write(df, "replace")
+    val (version, snapshot) = (t.version, t.metadata.currentSnapshot)
+    val Seq(result) = Maintenance.runAll(spark, catalog, "w", "n")
+    assert(result.ok, result)
+    assert(result.detail.startsWith("nothing to compact;"), result.detail)
+    assert(t.version == version && t.metadata.currentSnapshot == snapshot)
+  }
+
+  test("reads after RENAME COLUMN and runAll return the rows read before") {
+    val catalog = new LakeCatalog(tmpDir("maint_rename_wh"))
+    def batch(ids: Range) = ids.map(i => (i.toLong, s"n$i")).toDF("id", "name").coalesce(1)
+    // "many" is rewritten by the compaction, "one" is carried as written
+    val many = catalog.ensureTable(spark, "w", "n", "many", batch(1 to 2).schema)
+    many.write(batch(1 to 10), "append")
+    many.write(batch(11 to 20), "append")
+    val one = catalog.ensureTable(spark, "w", "n", "one", batch(1 to 2).schema)
+    one.write(batch(1 to 10), "append")
+    Seq(many, one).foreach(_.renameColumn("name", "label"))
+    val before = Seq(many, one).map(_.read().collect().toSet)
+    assert(before.forall(_.forall(r => r.getString(1) != null)))
+    val results = Maintenance.runAll(spark, catalog, "w", "n")
+    assert(results.map(r => r.table -> r.detail.takeWhile(_ != ';')).toMap ==
+      Map("many" -> "compacted 1 partition(s)", "one" -> "nothing to compact"), results)
+    assert(Seq(many, one).map(_.read().collect().toSet) == before)
+    assert(many.read().columns.toSeq == Seq("id", "label"))
+  }
 }
